@@ -83,7 +83,7 @@ HEAVY = {
     # and the vocabulary-sized BPE expansion
     "sentence_dedup_c4": corpusprep.sentence_dedup_c4,
     "dup_span_census": corpusprep.dup_span_census,
-    "dedup_clusters_star": llm.dedup_clusters_star,
+    "dedup_clusters_star": llm.dedup_clusters,
     "bpe_pair_counts": corpusprep.bpe_pair_counts,
     # round-3 wave 2: the block-join pair generators (candidate count
     # grows with data), the basket self-join, the corpus-scan retrieval

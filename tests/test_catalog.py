@@ -17,6 +17,7 @@ REPRESENTATIVE = [
     "asof_last_order",
     "window_topk_parts",
     "dedup_near_minhash",
+    "dedup_clusters",
     "embedding_topk",
     "rollup_orders",
 ]
@@ -34,6 +35,18 @@ def oracle():
 def test_catalog_is_complete():
     assert len(QUERIES) >= 27
     assert set(ORACLE_SQL) <= set(QUERIES)
+
+
+def test_no_query_name_registered_twice():
+    """Every module registers its own names: a name in two modules would
+    let merge order silently pick one callable (or oracle)."""
+    from collections import Counter
+
+    from waterbear_spark.queries import catalog
+
+    for attr in ("QUERIES", "ORACLES"):
+        counts = Counter(k for m in catalog._MODULES for k in getattr(m, attr))
+        assert [k for k, n in counts.items() if n > 1] == [], attr
 
 
 def test_every_query_has_a_docstring():
@@ -154,17 +167,9 @@ def test_priority_window_integrity():
 
     # the rest must be sorted by (last verified round, name): stalest
     # evidence rotates to the front, never-verified (round 0) before all
-    # — except _DEFER names (new this round, locally certified), which
-    # sort as round _DEFER_ROUND so they don't crowd the older backlog
     last = catalog._last_verified_round()
     rest = names[len(head):]
-    key = lambda k: (  # noqa: E731
-        catalog._DEFER_ROUND if k in catalog._DEFER else last.get(k, 0),
-        k,
-    )
-    assert rest == sorted(rest, key=key)
-    for k in catalog._DEFER:
-        assert k in catalog.QUERIES, f"deferred entry {k} missing"
+    assert rest == sorted(rest, key=lambda k: (last.get(k, 0), k))
 
     window = names[:50]
     rows_only = [k for k in window if k not in catalog.ORACLE_SQL]

@@ -6,7 +6,7 @@
    2.1/1.5/1.8 s with the barrier) must keep a cached relation in their
    physical plans — the plan-level witness that the explode reads a
    materialized shingle-set frame instead of re-evaluating it.
-2. Rotation hygiene: every _PRIORITY / _DEFER name must exist in the
+2. Rotation hygiene: every _PRIORITY name must exist in the
    catalog — a typo'd name silently drops a query out of the intended
    driver-evidence slot.
 """
@@ -14,7 +14,7 @@
 import pytest
 
 from tests.conftest import SF_SMOKE
-from waterbear_spark.queries.catalog import QUERIES, _DEFER, _PRIORITY
+from waterbear_spark.queries.catalog import QUERIES, _PRIORITY
 from waterbear_spark.queries.wave24 import contamination_ngram_sweep
 from waterbear_spark.queries.wave26 import bloom_decontaminate
 from waterbear_spark.queries.wave27 import novelty_profile_by_source
@@ -44,4 +44,3 @@ def test_shingle_explode_reads_cached_frame(spark, fn):
 
 def test_rotation_names_exist():
     assert set(_PRIORITY) <= set(QUERIES)
-    assert _DEFER <= set(QUERIES)

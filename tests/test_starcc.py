@@ -1,6 +1,7 @@
-"""Large-star/small-star connected components: equivalence to a
-union-find reference on adversarial graph shapes, and the catalog twin's
-agreement with the min-label implementation."""
+"""Connected components (operators/starcc.py): both tiers — the bounded
+driver union-find and the large-star/small-star loop — against a
+union-find reference on adversarial graph shapes, the single catalog
+function behind both CC names, and the session left as found."""
 
 import random
 
@@ -8,6 +9,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from tests.conftest import SF_SMOKE
+from waterbear_spark.operators import starcc
 from waterbear_spark.operators.starcc import star_connected_components
 
 
@@ -66,16 +68,29 @@ def test_random_graphs_match_union_find(spark):
         _check(spark, edges)
 
 
-def test_catalog_twin_matches_min_label(spark):
-    from waterbear_spark.queries.llm import dedup_clusters, dedup_clusters_star
+def test_catalog_names_resolve_to_one_function():
+    from waterbear_spark.queries.catalog import ORACLE_SQL, QUERIES
 
-    a = sorted(
-        map(tuple, dedup_clusters(spark, SF_SMOKE).collect())
-    )
-    b = sorted(
-        map(tuple, dedup_clusters_star(spark, SF_SMOKE).collect())
-    )
-    assert a == b
+    assert QUERIES["dedup_clusters"] is QUERIES["dedup_clusters_star"]
+    assert ORACLE_SQL["dedup_clusters"] is ORACLE_SQL["dedup_clusters_star"]
+
+
+@pytest.mark.parametrize(
+    "name", ["dedup_clusters", "dedup_clusters_star", "leakage_free_split"]
+)
+def test_warm_call_leaves_no_persisted_rdds(spark, name):
+    """A query leaves the session as it found it: once a first call has
+    warmed whatever the query's own inputs cache, a second call adds no
+    persisted RDD (the CC edge cache is released before returning)."""
+    from waterbear_spark.queries.catalog import QUERIES
+
+    def _persisted():
+        return set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
+
+    QUERIES[name](spark, SF_SMOKE).collect()
+    before = _persisted()
+    QUERIES[name](spark, SF_SMOKE).collect()
+    assert _persisted() == before
 
 
 def test_lateral_decorrelates_to_window_join(spark):
@@ -93,87 +108,58 @@ def test_lateral_decorrelates_to_window_join(spark):
     assert "CartesianProduct" not in plan
 
 
-def test_above_threshold_driver_tier_matches(spark):
-    # > SPARK_GRAFT_CC_LOCAL_MAX (512) distinct edges but under the
-    # driver-tier bound: exercises the bounded-collect union-find
-    rng = random.Random(11)
+def _random_graph(seed, n_edges, n_nodes):
+    rng = random.Random(seed)
     seen = set()
-    while len(seen) < 700:
-        a, b = rng.randrange(500), rng.randrange(500)
+    while len(seen) < n_edges:
+        a, b = rng.randrange(n_nodes), rng.randrange(n_nodes)
         if a != b:
             seen.add((min(a, b), max(a, b)))
-    _check(spark, sorted(seen))
+    return sorted(seen)
+
+
+def test_above_threshold_driver_tier_matches(spark):
+    # 700 distinct edges, under DRIVER_MAX_EDGES: the bounded-collect
+    # union-find answers
+    _check(spark, _random_graph(11, 700, 500))
 
 
 def test_above_threshold_distributed_path_matches(spark, monkeypatch):
     # driver tier disabled: exercises the alternating-star loop (the
-    # 100 TB path) post-dispatch on the same 700-edge graph
-    monkeypatch.setenv("SPARK_GRAFT_CC_DRIVER_MAX", "0")
-    rng = random.Random(11)
-    seen = set()
-    while len(seen) < 700:
-        a, b = rng.randrange(500), rng.randrange(500)
-        if a != b:
-            seen.add((min(a, b), max(a, b)))
-    _check(spark, sorted(seen))
+    # 100 TB path) on the same 700-edge graph
+    monkeypatch.setattr(starcc, "DRIVER_MAX_EDGES", 0)
+    _check(spark, _random_graph(11, 700, 500))
 
 
 def test_local_and_distributed_paths_agree(spark, monkeypatch):
-    # same 300-edge graph through all three engines: identical label
-    # sets. Dispatch order is driver tier FIRST, so the row-local fold
-    # only runs with the driver tier disabled (r11 advice: the old
-    # first collect silently used the driver tier and compared it to
-    # itself).
-    rng = random.Random(13)
-    seen = set()
-    while len(seen) < 300:
-        a, b = rng.randrange(150), rng.randrange(150)
-        if a != b:
-            seen.add((min(a, b), max(a, b)))
-    df = spark.createDataFrame(sorted(seen), "src long, dst long")
-    # row-local fold: driver tier off, 300 <= LOCAL_MAX default (512)
-    monkeypatch.setenv("SPARK_GRAFT_CC_DRIVER_MAX", "0")
-    local = {
-        (r.vertex, r.component) for r in star_connected_components(df).collect()
-    }
-    # driver union-find: default driver tier dispatches first
-    monkeypatch.delenv("SPARK_GRAFT_CC_DRIVER_MAX")
+    # same 300-edge graph through both tiers: identical label sets
+    df = spark.createDataFrame(_random_graph(13, 300, 150), "src long, dst long")
     driver = {
         (r.vertex, r.component) for r in star_connected_components(df).collect()
     }
-    # alternating-star loop: both bounded tiers off
-    monkeypatch.setenv("SPARK_GRAFT_CC_DRIVER_MAX", "0")
-    monkeypatch.setenv("SPARK_GRAFT_CC_LOCAL_MAX", "0")
+    monkeypatch.setattr(starcc, "DRIVER_MAX_EDGES", 0)
     dist = {
         (r.vertex, r.component) for r in star_connected_components(df).collect()
     }
-    assert local == driver == dist
+    assert driver == dist
 
 
 def test_over_threshold_graph_never_collects(spark, monkeypatch):
     """The driver tier's collect is gated on the already-paid signature
-    count: a graph over SPARK_GRAFT_CC_DRIVER_MAX edges must fall through
-    to the next tier without _driver_components ever being invoked — an
-    unbounded future consumer cannot silently collect (r11 verdict #8)."""
-    from waterbear_spark.operators import starcc
+    count: a graph over DRIVER_MAX_EDGES edges must go to the star loop
+    without _driver_components ever being invoked — an unbounded future
+    consumer cannot silently collect."""
 
     def _boom(*a, **k):
         raise AssertionError("driver tier collected an over-threshold graph")
 
     monkeypatch.setattr(starcc, "_driver_components", _boom)
-    monkeypatch.setenv("SPARK_GRAFT_CC_DRIVER_MAX", "10")
+    monkeypatch.setattr(starcc, "DRIVER_MAX_EDGES", 10)
     edges = [(i, i + 1) for i in range(40)]  # 40 > 10: over the tier bound
-    df = spark.createDataFrame(edges, "src long, dst long")
-    got = {(r.vertex, r.component) for r in star_connected_components(df).collect()}
-    want = set(_union_find_components(edges).items())
-    assert got == want  # row-local fold tier (40 <= LOCAL_MAX) answered
-    # and with BOTH bounded tiers off the star loop itself answers
-    monkeypatch.setenv("SPARK_GRAFT_CC_LOCAL_MAX", "0")
-    got2 = {(r.vertex, r.component) for r in star_connected_components(df).collect()}
-    assert got2 == want
+    _check(spark, edges)
 
 
 def test_long_chain_above_threshold(spark, monkeypatch):
     # 600-edge path graph: adversarial diameter for the distributed loop
-    monkeypatch.setenv("SPARK_GRAFT_CC_DRIVER_MAX", "0")
+    monkeypatch.setattr(starcc, "DRIVER_MAX_EDGES", 0)
     _check(spark, [(i, i + 1) for i in range(600)])

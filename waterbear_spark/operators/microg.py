@@ -192,101 +192,3 @@ def kcore_surviving_edges(edges: Column, k: int) -> Column:
         F.sequence(F.lit(1), F.greatest(n_nodes, F.lit(1))), init, _round
     )["e"]
 
-
-def cc_labels_local(packed: DataFrame) -> DataFrame:
-    """Connected components of a SMALL packed edge list (one ``edges``
-    array row of (u, v) structs, deduped, no self-loops): every incident
-    vertex labeled with the minimum reachable vertex id — the exact
-    output contract of ``starcc.star_connected_components``, which
-    dispatches here below its size threshold.
-
-    Algorithm: synchronous min-label descent, alternating a neighbour
-    RELAX step (label(v) <- min(label(v), labels of N(v))) with a
-    pointer JUMP step (label(v) <- min(label(v), label(label(v))) — the
-    path-halving that makes chain-shaped components converge in
-    O(log diameter) full rounds instead of O(diameter)). Labels descend
-    monotonically to the min-reachable fixpoint; relax steps alone bound
-    convergence by the diameter, so the 2*(|edges|+2)-step sequence is a
-    guaranteed-fixpoint cap, and a carried done flag (two consecutive
-    no-change steps == both half-steps are identities == fixpoint) makes
-    every post-fixpoint step O(1). Steps alternate as separate fold
-    iterations so each half-step's result is MATERIALIZED — a nested
-    two-phase expression would re-derive the inner phase per element
-    (the interpreted-HOF inlining trap documented on the k-core peel).
-    """
-    edges = F.col("edges")
-    nodes = F.array_sort(
-        F.array_distinct(
-            F.concat(
-                F.transform(edges, lambda e: e["u"]),
-                F.transform(edges, lambda e: e["v"]),
-            )
-        )
-    )
-    init_labels = F.transform(
-        nodes, lambda n: F.struct(n.alias("node"), n.alias("label"))
-    )
-
-    def _relax(lab: Column) -> Column:
-        def _new(x: Column) -> Column:
-            inc = F.filter(
-                edges, lambda e: (e["u"] == x["node"]) | (e["v"] == x["node"])
-            )
-            nbr = F.array_min(
-                F.transform(
-                    inc,
-                    lambda e: F.least(
-                        _lookup(lab, e["u"], "node", "label"),
-                        _lookup(lab, e["v"], "node", "label"),
-                    ),
-                )
-            )
-            return F.least(x["label"], F.coalesce(nbr, x["label"]))
-
-        return F.transform(
-            lab, lambda x: F.struct(x["node"].alias("node"), _new(x).alias("label"))
-        )
-
-    def _jump(lab: Column) -> Column:
-        return F.transform(
-            lab,
-            lambda x: F.struct(
-                x["node"].alias("node"),
-                F.least(
-                    x["label"],
-                    F.coalesce(
-                        _lookup(lab, x["label"], "node", "label"), x["label"]
-                    ),
-                ).alias("label"),
-            ),
-        )
-
-    init = F.struct(
-        init_labels.alias("l"),
-        F.lit(False).alias("prev_same"),
-        F.lit(False).alias("done"),
-    )
-
-    def _step(acc: Column, i: Column) -> Column:
-        new_l = F.when(i % 2 == 1, _relax(acc["l"])).otherwise(_jump(acc["l"]))
-        same = new_l == acc["l"]
-        return F.when(acc["done"], acc).otherwise(
-            F.struct(
-                new_l.alias("l"),
-                same.alias("prev_same"),
-                (same & acc["prev_same"]).alias("done"),
-            )
-        )
-
-    n_steps = F.greatest(F.lit(2) * F.size(edges) + F.lit(4), F.lit(4))
-    labels = F.aggregate(F.sequence(F.lit(1), n_steps), init, _step)["l"]
-    return (
-        packed.select(F.explode(labels).alias("x"))
-        .select(
-            F.col("x.node").alias("vertex"), F.col("x.label").alias("component")
-        )
-        # lazy lineage cut: consumers typically reference the labels
-        # twice (labels ⋈ per-component sizes); without this the whole
-        # fold would run once per reference
-        .localCheckpoint(eager=False)
-    )

@@ -1,25 +1,34 @@
-"""Large-star/small-star connected components (Kiveris et al. 2014,
-"Connected Components in MapReduce and Beyond").
+"""Connected components: the package's one CC implementation, with two
+tiers chosen by the edge count.
 
-This is the scale path that [[dedup_clusters]]'s min-label loop documents
-as its 100 TB swap: label propagation converges in O(diameter) rounds,
-while the alternating star transforms converge in O(log^2 n) rounds on
-ANY graph shape — the difference between 3 rounds and 300 on a chain-y
-near-dup graph. Each round is two shuffles (a min-aggregate and an edge
-re-emit join); no step materializes anything larger than the edge list,
-and every operation is a combinable DataFrame aggregate or equi-join.
+* **Bounded graphs** (at most ``DRIVER_MAX_EDGES`` distinct edges, e.g. a
+  near-dup pair graph or grid_dbscan's cell adjacency): one bounded
+  collect and a driver union-find rooted at the minimum vertex id.
+* **Everything larger:** alternating large-star/small-star (Kiveris et
+  al. 2014, "Connected Components in MapReduce and Beyond"), which
+  converges in O(log^2 n) rounds on ANY graph shape where min-label
+  propagation pays O(diameter) — the difference between 3 rounds and
+  300 on a chain-y near-dup graph. Each round is two shuffles (a
+  min-aggregate and an edge re-emit join); no step materializes
+  anything larger than the edge list, and every operation is a
+  combinable DataFrame aggregate or equi-join.
 
 Contract: input is an undirected edge list in any orientation (self-loops
 ignored); output is one (vertex, component) row per vertex incident to at
 least one edge, with component = the minimum vertex id in its component —
-byte-identical to the min-label formulation, which is what lets the two
-implementations share one oracle.
+identical on both tiers, so every consumer shares one oracle.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+# Largest distinct-edge count computed by the driver tier: <= 65536
+# 16-byte rows, ~1 MB per collect. Measured on the 256-edge sf0.1 near-dup
+# graph, the union-find takes ~0.05 s where a star round pays 3 shuffles
+# and 2 driver jobs.
+DRIVER_MAX_EDGES = 65536
 
 
 def _large_star(edges: DataFrame) -> DataFrame:
@@ -70,7 +79,7 @@ def _small_star(edges: DataFrame) -> DataFrame:
 def _driver_components(edges: DataFrame, session) -> DataFrame:
     """Components of a BOUNDED (u, v) edge frame via one bounded collect
     + driver union-find rooted at the minimum vertex id — the
-    (vertex, component) contract shared by every CC path. Callers gate
+    (vertex, component) contract of both tiers. Callers gate
     on an already-paid edge count; see star_connected_components."""
     parent: dict[int, int] = {}
 
@@ -97,12 +106,16 @@ def star_connected_components(
     edges_df: DataFrame, src: str = "src", dst: str = "dst",
     max_rounds: int = 50,
 ) -> DataFrame:
-    """Alternating large-star/small-star to a fixpoint.
+    """(vertex BIGINT, component BIGINT) of an undirected edge list.
 
-    Returns (vertex BIGINT, component BIGINT). ``max_rounds`` is a safety
-    cap far above the O(log^2 n) bound; convergence is detected by the
-    canonical edge set reaching a fixpoint (checked with one count per
-    round — a scalar, not a collect of the edges).
+    The deduped edges are cached once and their signature's count picks
+    the tier; the cache is released before returning on either tier (the
+    union-find result is a local frame, the star loop's result reads its
+    own checkpoints), so the driver tier leaves no persisted RDD behind.
+    ``max_rounds`` is a safety cap far above the O(log^2 n) bound;
+    convergence is detected by the canonical edge set reaching a
+    fixpoint (checked with one count per round — a scalar, not a collect
+    of the edges).
     """
     edges = (
         edges_df.select(
@@ -111,57 +124,36 @@ def star_connected_components(
         )
         .filter(F.col("u") != F.col("v"))
         .distinct()
-        .localCheckpoint()
+        .persist()
     )
-    def _signature(e: DataFrame):
-        """One combinable aggregate: (n_edges, sum(u), sum(v), sum(hash)).
-        Cheap per-round change detector — a differing signature proves
-        non-convergence without touching the exact set-equality path."""
-        row = e.agg(
-            F.count(F.lit(1)),
-            F.sum(F.col("u").cast("decimal(38,0)")),
-            F.sum(F.col("v").cast("decimal(38,0)")),
-            # 64-bit hashes summed exactly in decimal128 (ANSI-safe)
-            F.sum(F.xxhash64("u", "v").cast("decimal(38,0)")),
-        ).collect()[0]
-        return tuple(row)
+    try:
+        sig = _signature(edges)
+        # the collect is gated on the count the signature already paid,
+        # so an over-bound graph never reaches the driver
+        if sig[0] <= DRIVER_MAX_EDGES:
+            return _driver_components(edges, edges_df.sparkSession)
+        return _star_loop(edges, sig, max_rounds)
+    finally:
+        edges.unpersist()
 
-    sig = _signature(edges)
-    # size-adaptive dispatch (the signature's count is already paid): a
-    # pair graph below the threshold — near-dup clusters are a
-    # pairs-sized relation, tiny vs the corpus — computes its components
-    # row-locally over one packed edge array (microg.cc_labels_local,
-    # identical min-reachable output contract) instead of paying 2-4
-    # serialized micro-stages per star round. Above the threshold the
-    # alternating-star loop below is the 100 TB path, unchanged. The
-    # dial is data-size-adaptive, not cluster-tuned: the default bounds
-    # the row-local fold's O(rounds * nodes * edges) work, not local[32].
-    import os as _os
 
-    # BOUNDED-graph tier: a graph under SPARK_GRAFT_CC_DRIVER_MAX edges
-    # (e.g. grid_dbscan's <= 32x32-cell * 9-neighbour adjacency, or a
-    # near-dup pair graph — pairs-sized, tiny vs the corpus) computes
-    # its components with one bounded collect (<= 65536 16-byte edge
-    # rows, ~1 MB at the default) and a driver union-find, instead of 3
-    # shuffles + 2 driver jobs per star round. Same bounded-driver-
-    # scalar discipline as the k-row k-means seeds (wave20) and
-    # theil_sen's median selection; the count gating the collect is the
-    # signature count already paid above. Union roots by MIN vertex id,
-    # so the root of every tree is the component's minimum — the exact
-    # output contract of the other paths. Measured vs the interpreted
-    # row-local fold on the 256-edge sf0.1 near-dup graph: the fold
-    # pays 1.2-1.7 s of per-element expression evaluation, the driver
-    # union-find ~0.05 s — so the driver tier dispatches FIRST, and the
-    # fold (microg.cc_labels_local) remains the no-driver fallback for
-    # tiny graphs when the tier is disabled (SPARK_GRAFT_CC_DRIVER_MAX=0).
-    driver_max = int(_os.environ.get("SPARK_GRAFT_CC_DRIVER_MAX", "65536"))
-    if sig[0] <= driver_max:
-        return _driver_components(edges, edges_df.sparkSession)
-    local_max = int(_os.environ.get("SPARK_GRAFT_CC_LOCAL_MAX", "512"))
-    if sig[0] <= local_max:
-        from waterbear_spark.operators import microg
+def _signature(e: DataFrame):
+    """One combinable aggregate: (n_edges, sum(u), sum(v), sum(hash)).
+    Cheap per-round change detector — a differing signature proves
+    non-convergence without touching the exact set-equality path."""
+    row = e.agg(
+        F.count(F.lit(1)),
+        F.sum(F.col("u").cast("decimal(38,0)")),
+        F.sum(F.col("v").cast("decimal(38,0)")),
+        # 64-bit hashes summed exactly in decimal128 (ANSI-safe)
+        F.sum(F.xxhash64("u", "v").cast("decimal(38,0)")),
+    ).collect()[0]
+    return tuple(row)
 
-        return microg.cc_labels_local(microg.pack_edges(edges, "u", "v"))
+
+def _star_loop(edges: DataFrame, sig: tuple, max_rounds: int) -> DataFrame:
+    """Alternating large-star/small-star to a fixpoint; each round's
+    edges are checkpointed, so the result no longer reads ``edges``."""
     for _ in range(max_rounds):
         after = _small_star(_large_star(edges)).localCheckpoint()
         new_sig = _signature(after)

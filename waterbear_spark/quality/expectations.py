@@ -57,7 +57,11 @@ class Expectations:
 
     def violations(self) -> Column:
         """``array<string>`` of violated constraint names — pure Catalyst
-        (replaces the reference's Python UDF, tests_convertor.py:364-366)."""
+        (replaces the reference's Python UDF, tests_convertor.py:364-366).
+        With no rules, the empty ``F.array()`` would be typed VOID, so the
+        result is cast to the typed empty ``array<string>``."""
+        if not self.constraints:
+            return F.array().cast("array<string>")
         failed = F.filter(self.checks(), lambda c: ~c["ok"])
         return F.transform(failed, lambda c: c["name"])
 

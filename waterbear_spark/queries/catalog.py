@@ -56,112 +56,68 @@ from waterbear_spark.queries import (
     wave30,
 )
 
-QUERIES = {
-    **relational.QUERIES,
-    **behavior.QUERIES,
-    **relational_ext.QUERIES,
-    **relational_more.QUERIES,
-    **tpch_more.QUERIES,
-    **tpch_rest.QUERIES,
-    **graph.QUERIES,
-    **llm.QUERIES,
-    **textops.QUERIES,
-    **quality_queries.QUERIES,
-    **reconcile.QUERIES,
-    **multimodal_queries.QUERIES,
-    **streaming_queries.QUERIES,
-    **skew_queries.QUERIES,
-    **sqlsurface.QUERIES,
-    **corpusprep.QUERIES,
-    **timeseries.QUERIES,
-    **retrieval.QUERIES,
-    **mining.QUERIES,
-    **wave3.QUERIES,
-    **wave4.QUERIES,
-    **wave5.QUERIES,
-    **wave6.QUERIES,
-    **wave7.QUERIES,
-    **wave8.QUERIES,
-    **wave9.QUERIES,
-    **wave10.QUERIES,
-    **wave11.QUERIES,
-    **wave12.QUERIES,
-    **wave13.QUERIES,
-    **wave14.QUERIES,
-    **wave15.QUERIES,
-    **wave16.QUERIES,
-    **wave17.QUERIES,
-    **wave18.QUERIES,
-    **wave19.QUERIES,
-    **wave20.QUERIES,
-    **wave21.QUERIES,
-    **wave22.QUERIES,
-    **wave23.QUERIES,
-    **wave24.QUERIES,
-    **wave25.QUERIES,
-    **wave26.QUERIES,
-    **wave27.QUERIES,
-    **wave28.QUERIES,
-    **wave29.QUERIES,
-    **wave30.QUERIES,
+# Every module that registers catalog queries, each contributing its
+# QUERIES and ORACLES. A name may be registered by one module only
+# (tests/test_catalog.py), so no merge silently picks a winner; the
+# final order is set by _reorder below.
+_MODULES = (
+    relational,
+    behavior,
+    relational_ext,
+    relational_more,
+    tpch_more,
+    tpch_rest,
+    graph,
+    llm,
+    textops,
+    quality_queries,
+    reconcile,
+    multimodal_queries,
+    streaming_queries,
+    skew_queries,
+    sqlsurface,
+    corpusprep,
+    timeseries,
+    retrieval,
+    mining,
+    wave3,
+    wave4,
+    wave5,
+    wave6,
+    wave7,
+    wave8,
+    wave9,
+    wave10,
+    wave11,
+    wave12,
+    wave13,
+    wave14,
+    wave15,
+    wave16,
+    wave17,
+    wave18,
+    wave19,
+    wave20,
+    wave21,
+    wave22,
+    wave23,
+    wave24,
+    wave25,
+    wave26,
+    wave27,
+    wave28,
+    wave29,
+    wave30,
     # pandas_* queries intentionally exercise the Arrow/pandas UDF surface.
     # Everything else stays UDF-free by policy EXCEPT the documented
     # per-bucket BLAS family (embedding_knn_label, dedup_embedding_cosine,
     # semdedup_cells, knn_hubness_audit): bounded-bucket cosine scoring is the one shape where
     # an Arrow-batched matmul beats Catalyst folds ~8-15x (see SCALE.md)
-    **udfs.QUERIES,
-}
+    udfs,
+)
 
-ORACLE_SQL = {
-    **relational.ORACLES,
-    **behavior.ORACLES,
-    **relational_ext.ORACLES,
-    **relational_more.ORACLES,
-    **tpch_more.ORACLES,
-    **tpch_rest.ORACLES,
-    **graph.ORACLES,
-    **llm.ORACLES,
-    **textops.ORACLES,
-    **quality_queries.ORACLES,
-    **reconcile.ORACLES,
-    **multimodal_queries.ORACLES,
-    **streaming_queries.ORACLES,
-    **skew_queries.ORACLES,
-    **sqlsurface.ORACLES,
-    **corpusprep.ORACLES,
-    **timeseries.ORACLES,
-    **retrieval.ORACLES,
-    **mining.ORACLES,
-    **wave3.ORACLES,
-    **wave4.ORACLES,
-    **wave5.ORACLES,
-    **wave6.ORACLES,
-    **wave7.ORACLES,
-    **wave8.ORACLES,
-    **wave9.ORACLES,
-    **wave10.ORACLES,
-    **wave11.ORACLES,
-    **wave12.ORACLES,
-    **wave13.ORACLES,
-    **wave14.ORACLES,
-    **wave15.ORACLES,
-    **wave16.ORACLES,
-    **wave17.ORACLES,
-    **wave18.ORACLES,
-    **wave19.ORACLES,
-    **wave20.ORACLES,
-    **wave21.ORACLES,
-    **wave22.ORACLES,
-    **wave23.ORACLES,
-    **wave24.ORACLES,
-    **wave25.ORACLES,
-    **wave26.ORACLES,
-    **wave27.ORACLES,
-    **wave28.ORACLES,
-    **wave29.ORACLES,
-    **wave30.ORACLES,
-    **udfs.ORACLES,
-}
+QUERIES = {k: v for m in _MODULES for k, v in m.QUERIES.items()}
+ORACLE_SQL = {k: v for m in _MODULES for k, v in m.ORACLES.items()}
 
 # every oracle key must have a query twin (the reverse may lag for
 # non-SQL-expressible ops, which get rows-only checks)
@@ -219,14 +175,6 @@ _PRIORITY = [
     # is >= r5, continuing the freshness ratchet.
 ]
 
-# Queries introduced THIS round whose driver evidence can wait one
-# rotation: they sort as if verified in round _DEFER_ROUND so they
-# don't crowd the older never-verified names out of the 50-slot window.
-# Deferral REQUIRES committed same-round local certification (see
-# README "certification rule"). Round 11 adds no new queries.
-_DEFER: set[str] = set()
-_DEFER_ROUND = 11
-
 
 def _last_verified_round() -> dict[str, int]:
     """name -> latest driver round whose CORRECTNESS_r*.json records a
@@ -263,10 +211,7 @@ def _reorder(mapping: dict) -> dict:
     head = [k for k in _PRIORITY if k in mapping]
     rest = sorted(
         (k for k in mapping if k not in set(head)),
-        key=lambda k: (
-            _DEFER_ROUND if k in _DEFER else last.get(k, 0),
-            k,
-        ),
+        key=lambda k: (last.get(k, 0), k),
     )
     return {k: mapping[k] for k in head + rest}
 

@@ -314,9 +314,9 @@ def label_propagation_communities(spark: SparkSession, sf_dir: str) -> DataFrame
     as each node's own name; each round every node adopts the most
     frequent label among its neighbours, ties broken by lexicographic min
     — fully deterministic, so 3 rounds are bit-identical to the DuckDB
-    chained-CTE oracle. Unlike the min-label connected components in
-    ``llm.dedup_clusters``, mode-propagation finds dense sub-communities
-    inside a single connected component.
+    chained-CTE oracle. Unlike the connected components of
+    ``llm.dedup_clusters`` (``operators/starcc.py``), mode-propagation
+    finds dense sub-communities inside a single connected component.
 
     Scale: the edge list is bounded at 2x``_TOP_EDGES`` rows by
     construction, so the rounds run row-locally over one packed edge

@@ -420,126 +420,6 @@ ORDER BY doc_a, doc_b
 """
 
 
-def dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Connected components over the MinHash near-dup pair graph: every
-    document in a near-dup pair gets a cluster id (the minimum doc_id
-    reachable from it) and an ``is_canonical`` keep-flag — the step that
-    turns pairwise dedup output into an actionable keep/drop list.
-
-    Algorithm: iterative min-label propagation to a fixpoint — each round,
-    every vertex takes the min of its own label and its neighbours'
-    (converges in graph-diameter rounds; near-dup clusters are shallow, so
-    2-3 rounds in practice). This is the standard Spark pattern for
-    iterative graph algorithms: a driver loop over DataFrame joins with
-    ``localCheckpoint`` per round to truncate lineage, NOT a recursive SQL
-    — at 100 TB you'd swap the loop body for large-star/small-star
-    (Kiveris et al. 2014) which halves rounds on high-diameter graphs, but
-    the operator shape (join + min-agg per round) is identical.
-
-    Oracle: DuckDB ``WITH RECURSIVE`` transitive closure (min reachable
-    id), exact on the sparse pair graph.
-    """
-    pairs = dedup_near_minhash(spark, sf_dir).select("doc_a", "doc_b")
-    edges = (
-        pairs.select(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst"))
-        .union(pairs.select(F.col("doc_b").alias("src"), F.col("doc_a").alias("dst")))
-        .persist()
-    )
-    # size-adaptive dispatch, mirroring starcc: a pair graph this small
-    # (near-dup clusters are pairs-sized, tiny vs the corpus) labels its
-    # components from one bounded collect + driver union-find (r11: the
-    # interpreted row-local fold measured 1.2-1.7 s on the 256-edge
-    # sf0.1 graph vs ~0.05 s for the union-find; cc_labels_local remains
-    # the no-driver fallback when the tier is disabled); the distributed
-    # min-label loop below is the unbounded-graph path.
-    import os as _os
-
-    n_edges = edges.count()
-    half = edges.filter(F.col("src") < F.col("dst")).select(
-        F.col("src").alias("u"), F.col("dst").alias("v")
-    )
-    driver_max = int(_os.environ.get("SPARK_GRAFT_CC_DRIVER_MAX", "65536"))
-    local_max = int(_os.environ.get("SPARK_GRAFT_CC_LOCAL_MAX", "512"))
-    if n_edges <= 2 * driver_max or n_edges <= 2 * local_max:
-        from waterbear_spark.operators import microg, starcc
-
-        if n_edges <= 2 * driver_max:
-            labels = starcc._driver_components(half, spark)
-            # the union-find collected eagerly — the returned frame is a
-            # materialized createDataFrame that never reads the edge
-            # cache again, so drop it now (r11 advice: the entry was a
-            # pure leak in this branch; the row-local fold below, by
-            # contrast, reads the persisted edges lazily)
-            edges.unpersist()
-        else:
-            # pack the canonical (a < b) half of the PERSISTED symmetric
-            # list — half the edge array for the same components; edges
-            # stays persisted, the returned plan reads it lazily
-            labels = microg.cc_labels_local(
-                microg.pack_edges(half, "u", "v")
-            )
-        labels = labels.select(
-            F.col("vertex").alias("doc_id"), F.col("component").alias("comp")
-        )
-        sizes = labels.groupBy("comp").agg(
-            F.count(F.lit(1)).alias("cluster_size")
-        )
-        return (
-            labels.join(sizes, "comp")
-            .select(
-                "doc_id",
-                F.col("comp").alias("cluster_id"),
-                F.col("cluster_size").cast("int").alias("cluster_size"),
-                (F.col("doc_id") == F.col("comp")).alias("is_canonical"),
-            )
-            .orderBy("doc_id")
-        )
-    labels = (
-        edges.select(F.col("src").alias("doc_id"))
-        .distinct()
-        .withColumn("comp", F.col("doc_id"))
-        .localCheckpoint()
-    )
-    for _ in range(25):  # safety cap far above any plausible diameter
-        nmin = (
-            edges.join(
-                labels.select(F.col("doc_id").alias("dst_id"), "comp"),
-                F.col("dst") == F.col("dst_id"),
-            )
-            .groupBy("src")
-            .agg(F.min("comp").alias("nmin"))
-        )
-        new_labels = (
-            labels.join(nmin, labels["doc_id"] == nmin["src"], "left")
-            .select(
-                "doc_id",
-                F.least(F.col("comp"), F.coalesce("nmin", "comp")).alias("comp"),
-            )
-            .localCheckpoint()
-        )
-        changed = (
-            new_labels.alias("n")
-            .join(labels.select("doc_id", F.col("comp").alias("old")), "doc_id")
-            .filter(F.col("comp") < F.col("old"))
-            .count()
-        )
-        labels = new_labels
-        if changed == 0:
-            break
-    edges.unpersist()
-    sizes = labels.groupBy("comp").agg(F.count(F.lit(1)).alias("cluster_size"))
-    return (
-        labels.join(sizes, "comp")
-        .select(
-            "doc_id",
-            F.col("comp").alias("cluster_id"),
-            F.col("cluster_size").cast("int").alias("cluster_size"),
-            (F.col("doc_id") == F.col("comp")).alias("is_canonical"),
-        )
-        .orderBy("doc_id")
-    )
-
-
 DEDUP_CLUSTERS_SQL = f"""
 WITH RECURSIVE pairs AS (
     SELECT doc_a, doc_b FROM ({DEDUP_NEAR_SQL}) q
@@ -569,19 +449,24 @@ ORDER BY doc_id
 """
 
 
-def dedup_clusters_star(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The same near-dup clustering as [[dedup_clusters]], computed by
-    the alternating large-star/small-star transform
-    (``operators/starcc.py``) instead of min-label propagation — the
-    O(log^2 n)-round algorithm that min-label's docstring names as its
-    100 TB swap, here implemented and held to the identical output
-    contract (and the identical recursive-closure oracle). Two engines,
-    two algorithms, one answer.
+def dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Connected components over the MinHash near-dup pair graph: every
+    document in a near-dup pair gets a cluster id (the minimum doc_id
+    reachable from it) and an ``is_canonical`` keep-flag — the step that
+    turns pairwise dedup output into an actionable keep/drop list.
+    Registered under two catalog names (``dedup_clusters`` and
+    ``dedup_clusters_star``).
 
-    Scale: each round is two shuffles bounded by the edge list; round
-    count is O(log^2 n) on ANY graph shape, where min-label pays
-    O(diameter) — the difference that matters on chain-shaped near-dup
-    graphs (template drift, shingled boilerplate).
+    Algorithm: ``operators/starcc.py``. A pair graph is pairs-sized (tiny
+    vs the corpus), so at bench scales its components come from one
+    bounded collect + driver union-find; past the edge bound the
+    alternating large-star/small-star loop (Kiveris et al. 2014) takes
+    over — O(log^2 n) rounds on ANY graph shape where min-label
+    propagation pays O(diameter), the difference that matters on
+    chain-shaped near-dup graphs (template drift, shingled boilerplate).
+
+    Oracle: DuckDB ``WITH RECURSIVE`` transitive closure (min reachable
+    id), exact on the sparse pair graph.
     """
     from waterbear_spark.operators.starcc import star_connected_components
 
@@ -608,7 +493,7 @@ def leakage_free_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     the document id, so near-duplicate documents can never straddle
     splits — the leakage mode that silently inflates eval numbers when
     val/test contain near-copies of training docs. Clusters come from
-    the star-CC labels ([[dedup_clusters_star]]); singletons key on
+    the CC labels of [[dedup_clusters]]; singletons key on
     their own doc_id. Output: per-split census plus the computed
     cross-split leakage count — zero by construction, and the oracle
     (recursive-closure CC + the same lottery) certifies it rather than
@@ -2488,7 +2373,7 @@ QUERIES = {
     "dedup_near_minhash": dedup_near_minhash,
     "dedup_near_minhash_capped": dedup_near_minhash_capped,
     "dedup_clusters": dedup_clusters,
-    "dedup_clusters_star": dedup_clusters_star,
+    "dedup_clusters_star": dedup_clusters,
     "leakage_free_split": leakage_free_split,
     "decontaminate_overlap": decontaminate_overlap,
     "embedding_topk": embedding_topk,

@@ -272,9 +272,9 @@ def bom_rollup_cost(spark: SparkSession, sf_dir: str) -> DataFrame:
     fan-out — the same technique as [[rolling_distinct_users]]'s
     contribution expansion — followed by one hash aggregate on the
     ancestor key. An *iterative* formulation (the general-DAG fallback,
-    as in [[dedup_clusters]]) needs depth rounds of joins; the closed
-    form trades that for one pass, which is the right call whenever the
-    hierarchy is an arithmetic encoding.
+    like the connected-components loop behind [[dedup_clusters]]) needs
+    rounds of joins; the closed form trades that for one pass, which is
+    the right call whenever the hierarchy is an arithmetic encoding.
     """
     part = table(spark, sf_dir, "part").select(
         F.col("p_partkey").alias("k"), F.col("p_retailprice").alias("cost")

@@ -48,7 +48,7 @@ def grid_dbscan(spark: SparkSession, sf_dir: str) -> DataFrame:
     [[grid_neighbor_join]] generator): bucket points into {c}x{c}-unit
     cells, keep cells with >= {m} points (core cells), union
     8-neighbor-adjacent core cells into clusters with
-    [[dedup_clusters_star]]'s large-star/small-star operator, and
+    [[dedup_clusters]]'s connected-components operator, and
     report each cluster's cell count, point count, and bounding box.
 
     This is THE scale-out DBSCAN shape: density decisions and cluster
