@@ -40,9 +40,9 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
+from waterbear_spark.conf import session
 from waterbear_spark.queries import (
     corpusprep,
     graph,
@@ -232,18 +232,10 @@ def run_all(spark, sf_dir, iters=2):
 def main():
     if not os.path.isdir(SF1):
         sys.exit("localdata/sf1 missing - run scripts/make_sf1.py first")
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    spark = (
-        SparkSession.builder.master(f"local[{cpus}]")
-        .appName("bench-scaling")
-        .config("spark.sql.shuffle.partitions", str(max(int(cpus), 8)))
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
-        .getOrCreate()
+    spark = session(
+        int(os.environ.get("SPARK_GRAFT_CPUS", "32")),
+        driver_memory=os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"),
     )
-    spark.sparkContext.setLogLevel("ERROR")
     spark.range(1_000_000).selectExpr("sum(id)").collect()  # warmup
 
     small = run_all(spark, SF01)

@@ -29,8 +29,10 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from pyspark.sql import SparkSession, Window
+from pyspark.sql import Window
 from pyspark.sql import functions as F
+
+from waterbear_spark.conf import session
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
@@ -65,17 +67,7 @@ def fingerprint(df):
 
 
 def main():
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    spark = (
-        SparkSession.builder.master(f"local[{cpus}]")
-        .appName("strategy-bench")
-        .config("spark.sql.shuffle.partitions", str(max(int(cpus), 8)))
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false")
-        .config("spark.sql.adaptive.enabled", "true")
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("ERROR")
+    spark = session(int(os.environ.get("SPARK_GRAFT_CPUS", "32")))
     orders = spark.read.parquet(f"{SF_DIR}/orders.parquet").persist()
     events = spark.read.parquet(f"{SF_DIR}/events.parquet").persist()
     nation = spark.read.parquet(f"{SF_DIR}/nation.parquet")

@@ -21,8 +21,8 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import duckdb
-from pyspark.sql import SparkSession
 
+from waterbear_spark.conf import session
 from waterbear_spark.queries.catalog import ORACLE_SQL, QUERIES
 from waterbear_spark.queries.tables import TABLES
 from waterbear_spark.testing import frame_fingerprint, norm_cell
@@ -32,21 +32,9 @@ def main():
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     only = set(sys.argv[2:])
 
-    spark = (
-        SparkSession.builder.master("local[8]")
-        .appName("oracle-check")
-        .config("spark.sql.shuffle.partitions", "8")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false")
-        # one driver JVM survives ~200 collected query results; the 1g
-        # default heap OOMs near the end of the full sweep
-        .config(
-            "spark.driver.memory",
-            os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"),
-        )
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("ERROR")
+    # one driver JVM survives ~200 collected query results; the 1g
+    # default heap OOMs near the end of the full sweep
+    spark = session(8, driver_memory=os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
 
     con = duckdb.connect()
     for t in TABLES:

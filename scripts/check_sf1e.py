@@ -40,8 +40,8 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import duckdb
-from pyspark.sql import SparkSession
 
+from waterbear_spark.conf import session
 from waterbear_spark.queries.catalog import ORACLE_SQL, QUERIES
 from waterbear_spark.queries.mining import _ER_MAX_DIST, _SN_WINDOW
 from waterbear_spark.queries.tables import TABLES
@@ -124,19 +124,7 @@ def _union_find_components(pairs):
 def main():
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else os.path.join(REPO, "localdata", "sf1")
 
-    spark = (
-        SparkSession.builder.master("local[8]")
-        .appName("sf1e-check")
-        .config("spark.sql.shuffle.partitions", "8")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false")
-        .config(
-            "spark.driver.memory",
-            os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"),
-        )
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("ERROR")
+    spark = session(8, driver_memory=os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
 
     con = duckdb.connect()
     for t in TABLES:

@@ -14,8 +14,8 @@ import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from pyspark.sql import SparkSession
 
+from waterbear_spark.conf import session
 from waterbear_spark.queries.catalog import QUERIES
 
 SHOWCASE = {
@@ -102,15 +102,7 @@ SHOWCASE = {
 
 def main():
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.001"
-    spark = (
-        SparkSession.builder.master("local[8]")
-        .appName("plan-dump")
-        .config("spark.sql.shuffle.partitions", "8")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("ERROR")
+    spark = session(8)
 
     out = [
         "# PLANS — formatted physical plans for showcase queries",

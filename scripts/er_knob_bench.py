@@ -37,9 +37,9 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
+from waterbear_spark.conf import session
 from waterbear_spark.operators.starcc import star_connected_components
 from waterbear_spark.queries.mining import _ER_MAX_DIST, _neighborhood_pairs
 from waterbear_spark.queries.tables import table
@@ -138,18 +138,7 @@ def measure_golden(spark, sf_dir: str) -> dict:
 
 
 def main():
-    spark = (
-        SparkSession.builder.master(
-            f"local[{os.environ.get('SPARK_GRAFT_CPUS', '32')}]"
-        )
-        .appName("er-knob-bench")
-        .config("spark.sql.shuffle.partitions", "32")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", "8g")
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("ERROR")
+    spark = session(int(os.environ.get("SPARK_GRAFT_CPUS", "32")))
     report = {}
     for tag, sf_dir in (("sf0.1", SF01), ("sf1", SF1)):
         if not os.path.exists(sf_dir):

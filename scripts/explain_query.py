@@ -14,8 +14,8 @@ import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from pyspark.sql import SparkSession
 
+from waterbear_spark.conf import session
 from waterbear_spark.queries.catalog import QUERIES
 
 
@@ -25,15 +25,7 @@ def main():
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     out_dir = os.environ.get("SPARK_GRAFT_PLAN_DIR", "plans/r11")
     os.makedirs(out_dir, exist_ok=True)
-    spark = (
-        SparkSession.builder.master("local[8]")
-        .appName("waterbear-spark-explain")
-        .config("spark.sql.shuffle.partitions", "32")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("ERROR")
+    spark = session(8)
     for name in names:
         df = QUERIES[name](spark, sf_dir)
         plan = df._sc._jvm.PythonSQLUtils.explainString(  # noqa: SLF001

@@ -41,9 +41,9 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import duckdb
-from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
+from waterbear_spark.conf import session
 from waterbear_spark.queries import llm
 from waterbear_spark.queries.tables import table
 from waterbear_spark.testing import frame_fingerprint
@@ -107,18 +107,10 @@ def band_relation(spark, sf_dir):
 
 
 def main():
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    spark = (
-        SparkSession.builder.master(f"local[{cpus}]")
-        .appName("hub-cap-sf1-cert")
-        .config("spark.sql.shuffle.partitions", str(max(int(cpus), 8)))
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
-        .getOrCreate()
+    spark = session(
+        int(os.environ.get("SPARK_GRAFT_CPUS", "32")),
+        driver_memory=os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"),
     )
-    spark.sparkContext.setLogLevel("ERROR")
 
     build_corpus(spark)
     cap = llm._CAPPED_DIAL

@@ -31,8 +31,10 @@ import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from waterbear_spark.conf import session
 
 SRC = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 DST = os.path.join(
@@ -105,15 +107,7 @@ def shift_keys(df: DataFrame, table: str):
 
 
 def main():
-    spark = (
-        SparkSession.builder.master("local[16]")
-        .appName("make-sf1")
-        .config("spark.sql.shuffle.partitions", "16")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("ERROR")
+    spark = session(16)
     os.makedirs(DST, exist_ok=True)
 
     single_copy = {"region", "nation"}

@@ -16,8 +16,8 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from pyspark.sql import SparkSession
 
+from waterbear_spark.conf import session
 from waterbear_spark.queries.catalog import QUERIES
 
 
@@ -28,19 +28,10 @@ def main():
         reps = int(args[1])
         args = args[2:]
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    spark = (
-        SparkSession.builder.master(f"local[{cpus}]")
-        .appName("waterbear-spark-timeq")
-        .config("spark.sql.shuffle.partitions", str(max(int(cpus), 8)))
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
-        .getOrCreate()
+    spark = session(
+        int(os.environ.get("SPARK_GRAFT_CPUS", "32")),
+        driver_memory=os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"),
     )
-    spark.sparkContext.setLogLevel("ERROR")
     spark.range(1_000_000).selectExpr("sum(id)").collect()
 
     for name in args:

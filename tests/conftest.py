@@ -1,7 +1,8 @@
 import os
 
 import pytest
-from pyspark.sql import SparkSession
+
+from waterbear_spark.conf import session
 
 FIXTURES = os.path.join(os.path.dirname(__file__), "fixtures")
 MODEL_DIR = os.path.join(FIXTURES, "model")
@@ -13,15 +14,6 @@ SF_SMOKE = os.path.join(TESTDATA_ROOT, "sf0.001")
 
 @pytest.fixture(scope="session")
 def spark():
-    session = (
-        SparkSession.builder.master("local[4]")
-        .appName("waterbear-spark-tests")
-        .config("spark.sql.shuffle.partitions", "4")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.driver.memory", "4g")
-        .getOrCreate()
-    )
-    yield session
-    session.stop()
+    s = session(4, driver_memory="4g")
+    yield s
+    s.stop()

@@ -7,7 +7,6 @@ Contract under test:
   it came from);
 * the meta contract invalidates on ANY drift — corpus fingerprint or
   quantizer dial — and on absence/corruption;
-* ``SPARK_GRAFT_ANN_REBUILD=1`` forces the from-scratch path;
 * writes are atomic (no partial component is ever readable, no tmp
   debris survives);
 * the end-to-end path: an IVF index staged by one "session" and read
@@ -53,17 +52,6 @@ def test_roundtrip_and_meta_gate(spark, tmp_path, monkeypatch):
     assert store.staged_read(spark, store.component_dir("/x", "ivf"), meta) is None
     with open(os.path.join(path, "meta.json"), "w") as fh:
         fh.write("{not json")
-    assert store.staged_read(spark, path, meta) is None
-
-
-def test_rebuild_env_forces_miss(spark, tmp_path, monkeypatch):
-    monkeypatch.setenv("SPARK_GRAFT_ANN_INDEX_DIR", str(tmp_path))
-    path = store.component_dir("/c", "pq")
-    frames = {"codes": spark.createDataFrame([(0, 1, 2)], "m int, vec_id long, code int")}
-    meta = {"n": 1}
-    store.staged_write(spark, path, frames, meta)
-    assert store.staged_read(spark, path, meta) is not None
-    monkeypatch.setenv("SPARK_GRAFT_ANN_REBUILD", "1")
     assert store.staged_read(spark, path, meta) is None
 
 

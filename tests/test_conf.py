@@ -13,15 +13,22 @@ def test_recommended_conf_scales_partitions():
 
 
 def test_recommended_conf_applies(spark):
-    # every key must be a valid, settable-or-static Spark conf name: apply
-    # the dynamic ones to a live session without error
+    # every key must be a valid, settable Spark conf name: apply them to
+    # the live shared session, then put back the values found there
     conf = recommended_conf()
-    static = {"spark.sql.warehouse.dir"}
-    for key, value in conf.items():
-        if key in static:
-            continue
-        spark.conf.set(key, value)
-    assert spark.conf.get("spark.sql.adaptive.enabled") == "true"
-    spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.unset("spark.sql.shuffle.partitions")
-    spark.conf.unset("spark.sql.files.maxPartitionBytes")
+    old = {k: spark.conf.get(k, None) for k in conf}
+    try:
+        for key, value in conf.items():
+            spark.conf.set(key, value)
+        assert spark.conf.get("spark.sql.adaptive.enabled") == "true"
+    finally:
+        for k, v in old.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
+    # later test files run under the shared session's conf, not this one
+    assert (
+        spark.conf.get("spark.sql.shuffle.partitions")
+        == old["spark.sql.shuffle.partitions"]
+    )

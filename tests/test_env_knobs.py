@@ -16,8 +16,6 @@ pytestmark = pytest.mark.smoke
 ALLOWED = {
     # deployment path of the staged ANN index store
     "SPARK_GRAFT_ANN_INDEX_DIR",
-    # selects the from-scratch certification twin of the staged ANN index
-    "SPARK_GRAFT_ANN_REBUILD",
 }
 
 _PACKAGE = pathlib.Path(__file__).resolve().parents[1] / "waterbear_spark"

@@ -24,23 +24,7 @@ from __future__ import annotations
 from collections import Counter
 from itertools import combinations
 
-import pytest
-from pyspark.sql import SparkSession
-
 from waterbear_spark.queries import wave19
-
-
-@pytest.fixture(scope="module")
-def spark():
-    s = (
-        SparkSession.builder.master("local[4]")
-        .appName("round11-rowlocal-tests")
-        .config("spark.sql.shuffle.partitions", "4")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-    )
-    yield s
 
 
 def _stage_docs(spark, tmp_path, rows):

@@ -45,6 +45,10 @@ def _check(spark, edges):
     assert got == want
 
 
+def _persisted(spark):
+    return set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
+
+
 def test_chain_graph_high_diameter(spark):
     # worst case for min-label (O(diameter) rounds); star CC must still
     # produce min-vertex labels
@@ -84,13 +88,10 @@ def test_warm_call_leaves_no_persisted_rdds(spark, name):
     persisted RDD (the CC edge cache is released before returning)."""
     from waterbear_spark.queries.catalog import QUERIES
 
-    def _persisted():
-        return set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
-
     QUERIES[name](spark, SF_SMOKE).collect()
-    before = _persisted()
+    before = _persisted(spark)
     QUERIES[name](spark, SF_SMOKE).collect()
-    assert _persisted() == before
+    assert _persisted(spark) == before
 
 
 def test_lateral_decorrelates_to_window_join(spark):
@@ -163,3 +164,15 @@ def test_long_chain_above_threshold(spark, monkeypatch):
     # 600-edge path graph: adversarial diameter for the distributed loop
     monkeypatch.setattr(starcc, "DRIVER_MAX_EDGES", 0)
     _check(spark, [(i, i + 1) for i in range(600)])
+
+
+def test_star_tier_keeps_only_its_last_checkpoint(spark, monkeypatch):
+    """The star loop releases each superseded round's checkpoint once
+    the next round is compared: a warm call leaves at most the last one,
+    which its result reads (not one per round)."""
+    monkeypatch.setattr(starcc, "DRIVER_MAX_EDGES", 0)
+    df = spark.createDataFrame([(i, i + 1) for i in range(60)], "src long, dst long")
+    star_connected_components(df).collect()
+    before = _persisted(spark)
+    star_connected_components(df).collect()
+    assert len(_persisted(spark) - before) <= 1

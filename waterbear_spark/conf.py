@@ -1,11 +1,10 @@
-"""Recommended Spark session configuration for this engine at scale.
+"""Spark session configuration for this engine.
 
-Centralizes the session posture the operators are designed against, sized
-by a rough data-scale hint. Apply at session build time::
-
-    builder = SparkSession.builder.master(...)
-    for k, v in recommended_conf(input_tb=100).items():
-        builder = builder.config(k, v)
+``session(cores)`` is the one way to build a local session: the conf the
+catalog is tuned and benchmarked under (``bench.py`` builds the same
+conf by hand). ``recommended_conf(input_tb=...)`` is the cluster posture
+the operators are designed against, sized by a rough data-scale hint;
+apply it at cluster session build time.
 
 Rationale per knob is inline — these are the levers the 100 TB design
 notes throughout the repo assume (AQE on, skew-join on, partition sizes
@@ -13,6 +12,30 @@ that keep shuffle blocks in executor memory).
 """
 
 from __future__ import annotations
+
+from pyspark.sql import SparkSession
+
+
+def session(cores: int, driver_memory: str = "8g") -> SparkSession:
+    """A ``local[cores]`` session with the conf the catalog's speed
+    depends on (``pagerank_bipartite`` runs ~8x slower under Spark's
+    default 200 shuffle partitions). Reuses a live session, re-applying
+    the runtime settings to it."""
+    spark = (
+        SparkSession.builder.master(f"local[{cores}]")
+        .appName("waterbear-spark")
+        # one task per core, floored so small hosts still split shuffles
+        .config("spark.sql.shuffle.partitions", str(max(cores, 8)))
+        # deterministic timestamps for cross-engine comparison
+        .config("spark.sql.session.timeZone", "UTC")
+        .config("spark.ui.enabled", "false")
+        .config("spark.sql.adaptive.enabled", "true")
+        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
+        .config("spark.driver.memory", driver_memory)
+        .getOrCreate()
+    )
+    spark.sparkContext.setLogLevel("ERROR")
+    return spark
 
 
 def recommended_conf(

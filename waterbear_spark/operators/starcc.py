@@ -111,7 +111,8 @@ def star_connected_components(
     The deduped edges are cached once and their signature's count picks
     the tier; the cache is released before returning on either tier (the
     union-find result is a local frame, the star loop's result reads its
-    own checkpoints), so the driver tier leaves no persisted RDD behind.
+    last checkpoint), so the driver tier leaves no persisted RDD behind
+    and the star tier leaves one.
     ``max_rounds`` is a safety cap far above the O(log^2 n) bound;
     convergence is detected by the canonical edge set reaching a
     fixpoint (checked with one count per round — a scalar, not a collect
@@ -151,12 +152,30 @@ def _signature(e: DataFrame):
     return tuple(row)
 
 
+def _checkpoint(df: DataFrame) -> tuple[DataFrame, int | None]:
+    """Eager ``localCheckpoint`` of ``df``, plus the id of the persisted
+    RDD that holds its blocks (``DataFrame.unpersist`` never reaches
+    them: a checkpoint is not a cache entry). The id is None when another
+    thread persisted an RDD meanwhile, since the two cannot be told apart."""
+    jsc = df.sparkSession.sparkContext._jsc
+    before = set(jsc.getPersistentRDDs().keySet())
+    ckpt = df.localCheckpoint()
+    new = set(jsc.getPersistentRDDs().keySet()) - before
+    return ckpt, (new.pop() if len(new) == 1 else None)
+
+
 def _star_loop(edges: DataFrame, sig: tuple, max_rounds: int) -> DataFrame:
     """Alternating large-star/small-star to a fixpoint; each round's
-    edges are checkpointed, so the result no longer reads ``edges``."""
+    edges are checkpointed, so the result no longer reads ``edges``. A
+    superseded round's checkpoint is released once the next round is
+    materialized and compared, so only the last one, which the result
+    reads, stays persisted."""
+    jsc = edges.sparkSession.sparkContext._jsc
+    edges_id = None  # the caller owns, and releases, the input edges
     for _ in range(max_rounds):
-        after = _small_star(_large_star(edges)).localCheckpoint()
+        after, after_id = _checkpoint(_small_star(_large_star(edges)))
         new_sig = _signature(after)
+        changed = 1
         if new_sig == sig:
             # signatures agree -> run the EXACT set-equality confirm
             # (empty symmetric difference); in practice this executes
@@ -166,12 +185,11 @@ def _star_loop(edges: DataFrame, sig: tuple, max_rounds: int) -> DataFrame:
                 after.join(edges, ["u", "v"], "left_anti").limit(1).count()
                 + edges.join(after, ["u", "v"], "left_anti").limit(1).count()
             )
-            edges = after
-            if changed == 0:
-                break
-        else:
-            edges = after
-        sig = new_sig
+        if edges_id is not None:
+            jsc.getPersistentRDDs().get(edges_id).unpersist(False)
+        edges, edges_id, sig = after, after_id, new_sig
+        if changed == 0:
+            break
     return (
         edges.select(F.col("u").alias("vertex"), F.col("v").alias("component"))
         .union(edges.select(F.col("v").alias("vertex"), F.col("v").alias("component")))

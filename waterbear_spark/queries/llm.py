@@ -1075,10 +1075,10 @@ def _ivf_index(
     keyed by a corpus fingerprint + every quantizer dial, and later
     sessions serve queries from the staged relations — the production
     shape (indexes are shipped, not rebuilt per query). Staleness or a
-    knob change invalidates the stage; ``SPARK_GRAFT_ANN_REBUILD=1``
-    forces the from-scratch path (the bench/cert twin). Staged reads
-    stay continuously certified because the DuckDB oracles re-derive
-    the index from scratch on every check.
+    knob change invalidates the stage; an empty
+    ``SPARK_GRAFT_ANN_INDEX_DIR`` forces the from-scratch path (the
+    bench/cert twin). Staged reads stay continuously certified because
+    the DuckDB oracles re-derive the index from scratch on every check.
     """
     from waterbear_spark.sources import ann_index as _store
 
@@ -1200,9 +1200,8 @@ def _ivf_index(
     # recipe, exact int/double round-trip), but its plan is a flat
     # FileScan — so a later ``clearCache()`` (bench iterations, plan
     # dumps) re-reads two small tables instead of resurrecting the whole
-    # k-means build plan per consuming query. Under
-    # SPARK_GRAFT_ANN_REBUILD=1 ``staged_read`` returns None and the
-    # build frames are served directly (the from-scratch bench twin).
+    # k-means build plan per consuming query. On a concurrent-restage
+    # race ``staged_read`` returns None and the build frames serve.
     served = _store.staged_read(spark, stage_dir, stage_meta)
     if served is not None:
         cells.unpersist()

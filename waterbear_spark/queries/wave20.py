@@ -595,8 +595,7 @@ def _pq_codes(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]:
         # ``llm._ivf_index``: a later ``clearCache()`` then re-reads two
         # small parquet tables instead of re-running the M per-subspace
         # k-means trainings per consuming query. staged_read is None
-        # under SPARK_GRAFT_ANN_REBUILD=1 (from-scratch twin) or on a
-        # concurrent-restage race — the build frames serve in that case.
+        # on a concurrent-restage race — the build frames serve then.
         served = _store.staged_read(spark, stage_dir, stage_meta)
         if served is not None:
             codes.unpersist()

@@ -19,8 +19,8 @@ mismatch — data changed, knobs changed — reads as "absent" and triggers
 a rebuild-and-restage. The content hash is what makes "regenerate the
 embedding VALUES under unchanged vec_ids" read as stale (the round-9
 fingerprint was id-shape only and would have served the old index).
-Forcing a from-scratch build (the certification / bench twin) is
-``SPARK_GRAFT_ANN_REBUILD=1``.
+Forcing a from-scratch build (the certification / bench twin) is an
+empty ``SPARK_GRAFT_ANN_INDEX_DIR``.
 
 Correctness is continuously certified, not assumed: the DuckDB oracles
 for the IVF/PQ query family re-derive the index from scratch on every
@@ -102,8 +102,6 @@ def staged_read(
 ) -> dict[str, DataFrame] | None:
     """Load a staged component iff its meta matches ``expect_meta``
     exactly; None (-> caller rebuilds) on absence or any mismatch."""
-    if os.environ.get("SPARK_GRAFT_ANN_REBUILD") == "1":
-        return None
     meta_path = os.path.join(path, "meta.json")
     try:
         with open(meta_path) as fh:
