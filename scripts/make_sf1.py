@@ -1,6 +1,6 @@
 #!/usr/bin/env python
 """Deterministically scale the sf0.1 testdata 10x into localdata/sf1
-(gitignored) for scaling-curve benchmarks (scripts/bench_scaling.py).
+(gitignored) for the scaling-curve bench (``graft.py scaling``).
 
 The driver testdata is read-only and sf1 is not provided, so sf1 is
 synthesized as 10 key-shifted copies of sf0.1:
@@ -22,10 +22,13 @@ synthesized as 10 key-shifted copies of sf0.1:
   the scaling bench).
 
 No rand(): byte-deterministic output. Rerunning overwrites.
+
+Usage: python scripts/make_sf1.py SF0.1_DIR
 """
 
 from __future__ import annotations
 
+import argparse
 import os
 import sys
 
@@ -36,7 +39,6 @@ from pyspark.sql import functions as F
 
 from waterbear_spark.conf import session
 
-SRC = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 DST = os.path.join(
     os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "localdata", "sf1"
 )
@@ -107,6 +109,9 @@ def shift_keys(df: DataFrame, table: str):
 
 
 def main():
+    p = argparse.ArgumentParser(description="scale an sf0.1 dir 10x into localdata/sf1")
+    p.add_argument("src", help="the sf0.1 dir of <table>.parquet files")
+    src = p.parse_args().src
     spark = session(16)
     os.makedirs(DST, exist_ok=True)
 
@@ -116,7 +121,7 @@ def main():
         "events documents embeddings"
     ).split()
     for t in tables:
-        df = spark.read.parquet(f"{SRC}/{t}.parquet")
+        df = spark.read.parquet(f"{src}/{t}.parquet")
         out = df if t in single_copy else shift_keys(df, t)
         out.write.mode("overwrite").parquet(f"{DST}/{t}.parquet")
         print(f"{t}: {out.count()} rows")

@@ -1,6 +1,6 @@
 """Behavioral-analytics operators: funnel, cohort, concurrency sweep,
 deterministic reservoir sample, label propagation. Exact oracle equality
-runs in scripts/check_oracle.py; these tests guard the semantic and
+runs in scripts/graft.py oracle; these tests guard the semantic and
 plan-shape invariants."""
 
 from tests.conftest import SF_SMOKE

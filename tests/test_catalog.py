@@ -1,6 +1,6 @@
 """Catalog sanity inside pytest: a representative subset of queries is
 compared against its DuckDB oracle at sf0.001 (the full sweep runs via
-scripts/check_oracle.py at sf0.01); plus plan-shape assertions that guard
+scripts/graft.py oracle at sf0.01); plus plan-shape assertions that guard
 the scale properties .explain() claims."""
 
 import duckdb

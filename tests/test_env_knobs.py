@@ -1,8 +1,11 @@
-"""Census of the package's ``SPARK_GRAFT_*`` environment knobs.
+"""Census of the ``SPARK_GRAFT_*`` environment knobs the package and
+the scripts read.
 
 Behaviour the environment can change is behaviour the tests and the
 oracle certification may never see, so the package reads exactly the
-knobs named here. Adding one means changing this allowlist, in review.
+knobs named here and the scripts read none (their settings are
+command-line arguments). Adding one means changing this allowlist, in
+review. ``bench.py`` and ``perfbench/`` sit outside the scan.
 """
 
 import ast
@@ -18,15 +21,15 @@ ALLOWED = {
     "SPARK_GRAFT_ANN_INDEX_DIR",
 }
 
-_PACKAGE = pathlib.Path(__file__).resolve().parents[1] / "waterbear_spark"
+_REPO = pathlib.Path(__file__).resolve().parents[1]
 # a whole string literal naming a knob (or a prefix an f-string extends);
 # prose that merely mentions a knob inside a docstring is not a read
 _KNOB = re.compile(r"SPARK_GRAFT_\w*")
 
 
-def test_env_knobs_match_allowlist():
+def _knob_reads(top: str) -> dict[str, list[str]]:
     found = {}
-    for path in sorted(_PACKAGE.rglob("*.py")):
+    for path in sorted((_REPO / top).rglob("*.py")):
         for node in ast.walk(ast.parse(path.read_text(), str(path))):
             if (
                 isinstance(node, ast.Constant)
@@ -34,6 +37,15 @@ def test_env_knobs_match_allowlist():
                 and _KNOB.fullmatch(node.value)
             ):
                 found.setdefault(node.value, []).append(
-                    f"{path.relative_to(_PACKAGE.parent)}:{node.lineno}"
+                    f"{path.relative_to(_REPO)}:{node.lineno}"
                 )
+    return found
+
+
+def test_env_knobs_match_allowlist():
+    found = _knob_reads("waterbear_spark")
     assert set(found) == ALLOWED, found
+
+
+def test_scripts_read_no_env_knobs():
+    assert _knob_reads("scripts") == {}

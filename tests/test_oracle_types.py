@@ -4,9 +4,10 @@ DuckDB widens SUM-over-integer to HUGEINT and keeps DECIMAL aggregates
 decimal; both surface as float64/decimal128 when a harness collects via
 pandas/arrow, normalizing "5" into "5.0" and breaking the cross-engine
 value hash even on identical data (the round-1 failure mode of
-``interval_peak_concurrency`` / ``rollup_cascade``). This test runs the
-same sweep as ``scripts/audit_types.py`` so a new oracle can't
-reintroduce the escape.
+``interval_peak_concurrency`` / ``rollup_cascade``). This test is the
+sweep (the one-off ``scripts/audit_types.py``, last held by commit
+``bcd9c6e``, ran the same one), so a new oracle can't reintroduce the
+escape.
 """
 
 from __future__ import annotations

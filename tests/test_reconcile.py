@@ -1,5 +1,5 @@
 """Reconciliation primitives: generic table diff and order-insensitive
-checksum. Oracle equality runs in check_oracle.py; these tests pin the
+checksum. Oracle equality runs in graft.py oracle; these tests pin the
 operator semantics on constructed frames."""
 
 from tests.conftest import SF_SMOKE

@@ -1,6 +1,6 @@
 """Semantic invariants for the round-3 operators (time-series,
 relational extensions, corpus-prep). Exact oracle equality runs in
-scripts/check_oracle.py; these tests pin the properties that equality
+scripts/graft.py oracle; these tests pin the properties that equality
 alone wouldn't explain — recurrence math vs an independent
 implementation, closed-form vs brute-force equivalence, and census
 conservation laws."""

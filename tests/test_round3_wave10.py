@@ -1,5 +1,5 @@
 """Semantic invariants for the round-3 wave-10 operators. Oracle
-equality runs in scripts/check_oracle.py; these pin the semantics —
+equality runs in scripts/graft.py oracle; these pin the semantics —
 l-diversity gate laws, triangle inequality and replay for trajectories,
 the join-size identity against a Python join, backoff-vs-bigram score
 ordering, and RRF's fusion arithmetic."""

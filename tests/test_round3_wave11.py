@@ -1,5 +1,5 @@
 """Semantic invariants for the round-3 wave-11 operators. Oracle
-equality runs in scripts/check_oracle.py; these pin the statistics —
+equality runs in scripts/graft.py oracle; these pin the statistics —
 percentiles against numpy-free sorted picks, bipartite verdict against a
 pure-Python 2-coloring, Neyman budget conservation + optimality
 direction, and ANOVA/Welch against textbook recomputations."""

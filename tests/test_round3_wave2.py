@@ -1,6 +1,6 @@
 """Semantic invariants for the round-3 wave-2 operators (retrieval,
 mining, time-series additions). Exact oracle equality runs in
-scripts/check_oracle.py; these tests pin the properties equality alone
+scripts/graft.py oracle; these tests pin the properties equality alone
 wouldn't explain — independent reimplementations (pure-Python BM25 and
 sorted-neighborhood), conservation laws (decomposition re-adds,
 CUSUM telescoping), and bracketing bounds (interpolation)."""

@@ -1,5 +1,5 @@
 """Semantic invariants for the round-3 wave-4 operators. Exact oracle
-equality runs in scripts/check_oracle.py; these tests pin the properties
+equality runs in scripts/graft.py oracle; these tests pin the properties
 equality alone wouldn't explain — pure-Python reimplementations of the
 bit folds and streak runs, the hypothetical-rank insertion law, ledger
 conservation, and the hashing trick's token-mass conservation."""

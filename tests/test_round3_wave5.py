@@ -1,5 +1,5 @@
 """Semantic invariants for the round-3 wave-5 operators. Exact oracle
-equality runs in scripts/check_oracle.py; these tests pin the properties
+equality runs in scripts/graft.py oracle; these tests pin the properties
 equality can't explain — pure-Python ray casting and RAKE scoring, the
 shrinkage direction law of the target encoder, MASE recomputation, and
 the KMV estimator's error bound / undersaturation-exactness."""

@@ -1,5 +1,5 @@
 """Semantic invariants for the round-3 wave-6 operators. Exact oracle
-equality runs in scripts/check_oracle.py; these tests pin what equality
+equality runs in scripts/graft.py oracle; these tests pin what equality
 can't explain — the bootstrap CI brackets the truth with correct Poisson
 mass, scipy-free z-test recomputation, a pure-Python Dijkstra-by-BFS for
 harmonic centrality, brute-force containment parity on the reported

@@ -1,6 +1,6 @@
 """Semantic invariants for the round-3 wave-7 operators (model-eval and
 linkage-calibration family). Oracle equality runs in
-scripts/check_oracle.py; these pin the definitions themselves — AUC
+scripts/graft.py oracle; these pin the definitions themselves — AUC
 against a brute-force pair count, PSI against a scipy-free
 recomputation, DiD cell algebra, nDCG bounds and ideal-ordering, and
 the Fellegi-Sunter m>u sanity for informative fields."""

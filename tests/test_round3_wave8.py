@@ -1,5 +1,5 @@
 """Semantic invariants for the round-3 wave-8 operators. Oracle
-equality runs in scripts/check_oracle.py; these pin the definitions —
+equality runs in scripts/graft.py oracle; these pin the definitions —
 a pure-Python union-find replica of cell-DBSCAN, the backtest's
 no-future-leakage law, triple/pair Apriori monotonicity, trigram mass
 conservation, and the late-arrival census against a replayed timeline."""

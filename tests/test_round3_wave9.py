@@ -1,6 +1,6 @@
 """Semantic invariants for the round-3 wave-9 operators. Oracle
 equality (byte-identical SQL for the surface trio) runs in
-scripts/check_oracle.py; these pin the semantics — multiset identities
+scripts/graft.py oracle; these pin the semantics — multiset identities
 for INTERSECT/EXCEPT ALL, FILTER-vs-CASE equivalence, calibration
 conservation laws, and a pure-Python Holt-Winters recurrence replay."""
 

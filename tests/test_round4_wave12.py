@@ -1,6 +1,6 @@
 """Wave-12 operator coherence: pure-Python replays of the statistics and
 the iterative BPE loop at smoke scale (the DuckDB differential runs via
-scripts/check_oracle.py; these tests pin the SEMANTICS independently)."""
+scripts/graft.py oracle; these tests pin the SEMANTICS independently)."""
 
 import math
 from collections import Counter, defaultdict

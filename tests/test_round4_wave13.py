@@ -1,5 +1,5 @@
 """Wave-13 operator coherence: planted-data and pure-Python replays
-(the DuckDB differential runs via scripts/check_oracle.py)."""
+(the DuckDB differential runs via scripts/graft.py oracle)."""
 
 import math
 from collections import defaultdict

@@ -83,15 +83,17 @@ def test_catalog_names_resolve_to_one_function():
     "name", ["dedup_clusters", "dedup_clusters_star", "leakage_free_split"]
 )
 def test_warm_call_leaves_no_persisted_rdds(spark, name):
-    """A query leaves the session as it found it: once a first call has
-    warmed whatever the query's own inputs cache, a second call adds no
-    persisted RDD (the CC edge cache is released before returning)."""
+    """A query leaves the session as it found it: from a cleared cache
+    neither a first call nor a second adds a persisted RDD (the CC edge
+    cache and the shingle-set cache are released before returning)."""
     from waterbear_spark.queries.catalog import QUERIES
 
-    QUERIES[name](spark, SF_SMOKE).collect()
+    spark.catalog.clearCache()
     before = _persisted(spark)
     QUERIES[name](spark, SF_SMOKE).collect()
-    assert _persisted(spark) == before
+    assert _persisted(spark) == before, "first call"
+    QUERIES[name](spark, SF_SMOKE).collect()
+    assert _persisted(spark) == before, "warm call"
 
 
 def test_lateral_decorrelates_to_window_join(spark):

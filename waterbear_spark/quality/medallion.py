@@ -20,15 +20,7 @@ from pyspark.sql import functions as F
 from waterbear_spark.quality.expectations import Expectations
 from waterbear_spark.schema.compiler import CompiledEntity
 from waterbear_spark.sources.readers import read_entity
-
-try:  # delta-spark is optional in this environment
-    from delta.tables import DeltaTable  # noqa: F401
-
-    HAS_DELTA = True
-except ImportError:
-    HAS_DELTA = False
-
-_FORMAT = "delta" if HAS_DELTA else "parquet"
+from waterbear_spark.sources.sinks import DEFAULT_FORMAT as _FORMAT
 
 
 def bronze_ingest(

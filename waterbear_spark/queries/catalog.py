@@ -139,8 +139,8 @@ assert set(ORACLE_SQL) <= set(QUERIES), "oracle without query"
 # never-verified slice, then the STALEST previously-verified queries —
 # no query parks permanently outside the window, and a regression in a
 # long-validated query resurfaces once its evidence becomes the oldest.
-# CORRECTNESS_LOCAL.json (scripts/check_oracle.py, full catalog) remains
-# the per-round local certification on top.
+# CORRECTNESS_LOCAL.json (``scripts/graft.py oracle``, full catalog)
+# remains the per-round local certification on top.
 _PRIORITY = [
     # --- round 11 ---
     # the one catalog row with no driver-green record anywhere (its

@@ -28,9 +28,10 @@ def _pagerank_setup(
     spark: SparkSession, sf_dir: str
 ) -> tuple[DataFrame, DataFrame, int]:
     """(edges_deg persisted, nodes, n_nodes) — the static graph state
-    shared by every power iteration. Split out so
-    ``scripts/pagerank_rounds.py`` can time setup vs per-round cost on
-    the exact production code.
+    shared by every power iteration. Split out so setup and per-round
+    cost could be timed apart on the exact production code
+    (PAGERANK_ROUNDS.json, by ``scripts/pagerank_rounds.py`` at commit
+    ``bcd9c6e``).
 
     r12: the graph is persisted in DIRECTED-edge form (src, dst, deg)
     with the out-degree attached, instead of the r11 pair form probed at
@@ -122,7 +123,7 @@ def pagerank_bipartite(spark: SparkSession, sf_dir: str) -> DataFrame:
         # materialization is the standard Pregel discipline anyway.
         # eager=False keeps construction lazy (advice r5: the default
         # eager checkpoint made merely building this DataFrame run all
-        # 5 iteration jobs, e.g. under scripts/dump_plans.py's EXPLAIN);
+        # 5 iteration jobs, e.g. under ``graft.py explain``);
         # each round still materializes exactly once at the first action
         ranks = _pagerank_round(edges_deg, ranks, base).localCheckpoint(
             eager=False

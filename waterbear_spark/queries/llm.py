@@ -255,6 +255,16 @@ def dedup_near_minhash(
     (recall per exact-Jaccard bucket) as an oracle-checked query, and
     the band-degree cap bounds the one blowup the banding itself can't.
     """
+    return _near_dup_pairs(spark, sf_dir, max_band_degree)[0]
+
+
+def _near_dup_pairs(
+    spark: SparkSession, sf_dir: str, max_band_degree: int | None = None
+) -> tuple[DataFrame, DataFrame]:
+    """[[dedup_near_minhash]]'s pairs plus the persisted shingle-set
+    frame they read. The lazy query has to leave that cache in place;
+    an eager consumer releases it once it has materialized what it
+    needs from the pairs."""
     # widen BEFORE tokenizing: a projection built below the repartition
     # exchange runs inside the (often 1-split) scan stage, serializing
     # the per-token work the fan-out exists to spread
@@ -292,7 +302,7 @@ def dedup_near_minhash(
 
     pair_sets = sets.select("doc_id", "arr", "n")
     n_shared = F.size(F.array_intersect(F.col("na.arr"), F.col("nb.arr"))).cast("long")
-    return (
+    pairs = (
         candidates.join(pair_sets.alias("na"), F.col("doc_a") == F.col("na.doc_id"))
         .join(pair_sets.alias("nb"), F.col("doc_b") == F.col("nb.doc_id"))
         .select(
@@ -308,6 +318,7 @@ def dedup_near_minhash(
         .filter(F.col("jaccard") >= JACCARD_THRESHOLD)
         .orderBy("doc_a", "doc_b")
     )
+    return pairs, sets
 
 
 DEDUP_NEAR_SQL = f"""
@@ -449,6 +460,24 @@ ORDER BY doc_id
 """
 
 
+def _near_dup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(vertex, component) of the near-dup pair graph. The CC call is
+    eager and its result reads only driver data or its last checkpoint,
+    so the shingle-set cache is released before returning. Spark keys
+    its cache by plan: the release also evicts the entry that a live
+    [[dedup_near_minhash]] frame over the same ``sf_dir`` shares, which
+    then re-shingles on its next action."""
+    from waterbear_spark.operators.starcc import star_connected_components
+
+    pairs, sets = _near_dup_pairs(spark, sf_dir)
+    try:
+        return star_connected_components(
+            pairs.select("doc_a", "doc_b"), src="doc_a", dst="doc_b"
+        )
+    finally:
+        sets.unpersist()
+
+
 def dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Connected components over the MinHash near-dup pair graph: every
     document in a near-dup pair gets a cluster id (the minimum doc_id
@@ -468,10 +497,7 @@ def dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     Oracle: DuckDB ``WITH RECURSIVE`` transitive closure (min reachable
     id), exact on the sparse pair graph.
     """
-    from waterbear_spark.operators.starcc import star_connected_components
-
-    pairs = dedup_near_minhash(spark, sf_dir).select("doc_a", "doc_b")
-    labels = star_connected_components(pairs, src="doc_a", dst="doc_b")
+    labels = _near_dup_components(spark, sf_dir)
     sizes = labels.groupBy("component").agg(
         F.count(F.lit(1)).alias("cluster_size")
     )
@@ -504,11 +530,8 @@ def leakage_free_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     census is one 3-group aggregate. The leakage check is an aggregate
     over |groups| rows.
     """
-    from waterbear_spark.operators.starcc import star_connected_components
-
     docs = table(spark, sf_dir, "documents").select("doc_id")
-    pairs = dedup_near_minhash(spark, sf_dir).select("doc_a", "doc_b")
-    labels = star_connected_components(pairs, src="doc_a", dst="doc_b")
+    labels = _near_dup_components(spark, sf_dir)
     assigned = docs.join(
         F.broadcast(labels.withColumnRenamed("vertex", "doc_id")),
         "doc_id",
@@ -1810,8 +1833,8 @@ def jaccard_prefix_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     (common tokens never enter short prefixes). Everything shuffles by
     token or doc_id — the pair space never materializes. The subset cap
     exists only so the O(n²) ORACLE stays runnable; the operator itself
-    (``prefix_join_pairs``, which scripts/bench_scaling.py benches
-    uncapped at sf1) has no such bound.
+    (``prefix_join_pairs``, which ``graft.py scaling`` benches uncapped
+    at sf1) has no such bound.
     """
     docs = table(spark, sf_dir, "documents").filter(F.col("doc_id") < _PP_DOCS)
     return prefix_join_pairs(docs)

@@ -27,32 +27,25 @@ _PAIR_TOPK = 20
 
 
 def _neighborhood_pairs(
-    spark: SparkSession,
-    sf_dir: str,
-    max_dist: int,
-    window: int = _SN_WINDOW,
-    prefix_len: int | None = None,
+    spark: SparkSession, sf_dir: str, max_dist: int
 ) -> DataFrame:
     """Shared sorted-neighborhood candidate generation (see
     ``sorted_neighborhood_pairs`` for the distributed-rank and
-    block-join argument); ``max_dist`` sets the edit-distance verify.
-    ``window`` (neighborhood width) and ``prefix_len`` (rank-partition
-    prefix) are the two scale knobs — defaults are the catalog
-    semantics; ``scripts/er_knob_bench.py`` measures the trade
-    (ER_KNOB_BENCH.json).
+    block-join argument) over a ``_SN_WINDOW``-wide neighborhood;
+    ``max_dist`` sets the edit-distance verify. The window trade was
+    measured once (ER_KNOB_BENCH*.json, commit ``bcd9c6e``).
 
-    ``prefix_len=None`` (r10) widens the prefix with the corpus — 1
-    char up to ~30k rows, 2 to ~3M, 3 beyond — so per-group window
-    ranks stay bounded at any scale. The GLOBAL rank is invariant to
-    the prefix length (prefix groups are contiguous intervals of the
+    The rank-partition prefix widens with the corpus (r10) — 1 char up
+    to ~30k rows, 2 to ~3M, 3 beyond — so per-group window ranks stay
+    bounded at any scale. The GLOBAL rank is invariant to the prefix
+    length (prefix groups are contiguous intervals of the
     (p_name, p_partkey) ordering and lexicographic prefix order agrees
     with full-name order), so the output is bit-identical for every
     prefix choice; only the parallelism of the rank stage changes. The
     sizing count is one column-pruned metadata-cheap job."""
     parts = table(spark, sf_dir, "part").select("p_partkey", "p_name")
-    if prefix_len is None:
-        n = parts.count()
-        prefix_len = 1 if n <= 30_000 else (2 if n <= 3_000_000 else 3)
+    n = parts.count()
+    prefix_len = 1 if n <= 30_000 else (2 if n <= 3_000_000 else 3)
     g = F.substring("p_name", 1, prefix_len)
     counts = parts.groupBy(g.alias("g")).agg(F.count(F.lit(1)).alias("cnt"))
     # prefix-sum offsets over the (tiny, alphabet-bounded) group counts
@@ -71,7 +64,7 @@ def _neighborhood_pairs(
             (F.col("off") + F.col("r_in")).cast("long").alias("rn"),
         )
     )
-    blk = lambda rn: F.floor((F.col(rn) - 1) / window)  # noqa: E731
+    blk = lambda rn: F.floor((F.col(rn) - 1) / _SN_WINDOW)  # noqa: E731
     # the block join's input is small in BYTES (ranked rows) but the
     # verify downstream is ~2w levenshteins per row — AQE's size-based
     # coalesce would shrink the exchange to 1-2 partitions and starve
@@ -94,7 +87,7 @@ def _neighborhood_pairs(
         a.join(b, "jblk")
         .filter(
             (F.col("rn_b") > F.col("rn_a"))
-            & (F.col("rn_b") <= F.col("rn_a") + window)
+            & (F.col("rn_b") <= F.col("rn_a") + _SN_WINDOW)
         )
         # banded levenshtein: with a threshold the DP runs O(len * k)
         # instead of O(len^2) and returns -1 above the bound — the verify
@@ -272,9 +265,9 @@ LIMIT {_PAIR_TOPK}
 
 
 def _er_survivorship(members: DataFrame) -> DataFrame:
-    """The survivorship tail shared by [[er_golden_records]] and
-    ``scripts/er_knob_bench.py``: ONE golden record per component from a
-    ``(p_partkey, p_name, p_retailprice, component)`` relation.
+    """The survivorship tail of [[er_golden_records]]: ONE golden record
+    per component from a ``(p_partkey, p_name, p_retailprice,
+    component)`` relation.
 
     Saturation cap (round 7 — the r6 verdict's ER watch item; round 8
     restores the per-entity contract): the part-name vocabulary is

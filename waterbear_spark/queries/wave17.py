@@ -244,9 +244,10 @@ def semdedup_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
     DESIGN bound the scaling argument rests on is 2x the target — 4096
     vectors/cell, a 4096^2 float64 similarity matrix ~= 134 MB per
     worker, safely inside executor memory, with total work still
-    O(n * target) FLOPs. ``scripts/semdedup_occupancy.py`` measures the
-    realized occupancy against that 2x bound per scale (committed as
-    SEMDEDUP_OCCUPANCY_r{N}.json; sf1 max cell 2500 = 1.22x target).
+    O(n * target) FLOPs. The realized occupancy against that 2x bound
+    per scale is committed as SEMDEDUP_OCCUPANCY_r09/_r10.json (measured
+    by ``scripts/semdedup_occupancy.py`` at commit ``bcd9c6e``; sf1 max
+    cell 2500 = 1.22x target).
     At sf1 the matmul path cut the wall 110 s -> single digits (the
     fold variant burned ~64 boxed ops/pair; the matmul amortises to ~1).
 

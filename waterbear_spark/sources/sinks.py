@@ -33,6 +33,31 @@ except ImportError:
     DeltaTable = None
     HAS_DELTA = False
 
+# the table format every writer here uses unless told otherwise
+DEFAULT_FORMAT = "delta" if HAS_DELTA else "parquet"
+
+
+def _staged_swap(
+    df: DataFrame,
+    path: str,
+    fmt: str,
+    partition_cols: list[str] | None = None,
+) -> None:
+    """Replace the table at ``path`` with ``df``: write a staging
+    directory beside it, rename the table to a backup, rename the
+    staging directory in, delete the backup. Atomic enough for
+    single-writer pipelines; Delta is the answer for concurrent writers.
+    Pass ``partition_cols`` to keep a hive-partitioned layout."""
+    staging = f"{path}__staging_{uuid.uuid4().hex[:8]}"
+    writer = df.write.mode("overwrite").format(fmt)
+    if partition_cols:
+        writer = writer.partitionBy(*partition_cols)
+    writer.save(staging)
+    backup = f"{path}__old_{uuid.uuid4().hex[:8]}"
+    os.rename(path, backup)
+    os.rename(staging, path)
+    shutil.rmtree(backup)
+
 
 def write_partitioned(
     df: DataFrame,
@@ -42,7 +67,7 @@ def write_partitioned(
     mode: str = "overwrite",
 ) -> None:
     """Partition-pruned sink (directory layout = partition columns)."""
-    fmt = fmt or ("delta" if HAS_DELTA else "parquet")
+    fmt = fmt or DEFAULT_FORMAT
     df.write.mode(mode).format(fmt).partitionBy(*partition_cols).save(path)
 
 
@@ -116,7 +141,7 @@ def write_zordered(
     column); the z-key itself is row-local bit arithmetic, and the only
     exchange is the range partition that also sizes output files.
     """
-    fmt = fmt or ("delta" if HAS_DELTA else "parquet")
+    fmt = fmt or DEFAULT_FORMAT
     stats = df.agg(
         *[F.min(c).alias(f"mn_{c}") for c in cols],
         *[F.max(c).alias(f"mx_{c}") for c in cols],
@@ -194,12 +219,7 @@ def compact_files(
     n_files = max(1, math.ceil(total_bytes / (target_file_mb * 1024 * 1024)))
     df = spark.read.format(fmt).load(path)
 
-    staging = f"{path}__compact_{uuid.uuid4().hex[:8]}"
-    df.coalesce(n_files).write.mode("overwrite").format(fmt).save(staging)
-    backup = f"{path}__old_{uuid.uuid4().hex[:8]}"
-    os.rename(path, backup)
-    os.rename(staging, path)
-    shutil.rmtree(backup)
+    _staged_swap(df.coalesce(n_files), path, fmt)
     return n_files
 
 
@@ -266,7 +286,7 @@ def merge_upsert(
       :class:`CheckViolationError` aborts BEFORE any mutation and the
       target stays byte-identical.
     """
-    fmt = fmt or ("delta" if HAS_DELTA else "parquet")
+    fmt = fmt or DEFAULT_FORMAT
 
     # Delta parity: one target row must match at most one source row
     dup = (
@@ -369,13 +389,7 @@ def merge_upsert(
         _enforce_checks(upserts, check_constraints, "merge_upsert")
     kept = target.join(updates.select(*keys), on=keys, how="left_anti")
     merged = kept.unionByName(upserts, allowMissingColumns=merge_schema)
-
-    staging = f"{target_path}__staging_{uuid.uuid4().hex[:8]}"
-    merged.write.mode("overwrite").format(fmt).save(staging)
-    backup = f"{target_path}__old_{uuid.uuid4().hex[:8]}"
-    os.rename(target_path, backup)
-    os.rename(staging, target_path)
-    shutil.rmtree(backup)
+    _staged_swap(merged, target_path, fmt)
     return spark.read.format(fmt).load(target_path)
 
 
@@ -391,7 +405,7 @@ def scd2_apply(
     changed keys (set ``_valid_to``) and append the new versions as
     current rows. The silver-layer history pattern on top of merge.
     """
-    fmt = fmt or ("delta" if HAS_DELTA else "parquet")
+    fmt = fmt or DEFAULT_FORMAT
     target = spark.read.format(fmt).load(target_path)
 
     changed_keys = updates.select(key).distinct()
@@ -411,13 +425,7 @@ def scd2_apply(
         .drop(ts_col)
     )
     merged = untouched.unionByName(closing).unionByName(fresh)
-
-    staging = f"{target_path}__staging_{uuid.uuid4().hex[:8]}"
-    merged.write.mode("overwrite").format(fmt).save(staging)
-    backup = f"{target_path}__old_{uuid.uuid4().hex[:8]}"
-    os.rename(target_path, backup)
-    os.rename(staging, target_path)
-    shutil.rmtree(backup)
+    _staged_swap(merged, target_path, fmt)
     return spark.read.format(fmt).load(target_path)
 
 
@@ -448,7 +456,7 @@ def delete_where(
     single-writer/small-table variant. Pass ``partition_cols`` when the
     table is hive-partitioned so the rewrite preserves the layout.
     """
-    fmt = fmt or ("delta" if HAS_DELTA else "parquet")
+    fmt = fmt or DEFAULT_FORMAT
     if fmt == "delta" and HAS_DELTA:  # pragma: no cover - delta not in env
         target = DeltaTable.forPath(spark, target_path)
         before = spark.read.format("delta").load(target_path).count()
@@ -460,16 +468,7 @@ def delete_where(
     n_dead = df.filter(dead).count()
     if n_dead == 0:
         return 0
-    kept = df.filter(~dead)
-    staging = f"{target_path}__staging_{uuid.uuid4().hex[:8]}"
-    writer = kept.write.mode("overwrite").format(fmt)
-    if partition_cols:
-        writer = writer.partitionBy(*partition_cols)
-    writer.save(staging)
-    backup = f"{target_path}__old_{uuid.uuid4().hex[:8]}"
-    os.rename(target_path, backup)
-    os.rename(staging, target_path)
-    shutil.rmtree(backup)
+    _staged_swap(df.filter(~dead), target_path, fmt, partition_cols)
     return n_dead
 
 
@@ -532,7 +531,7 @@ def replace_where(
     predicate covers layout columns) + the staged-swap write; with
     Delta it becomes a metadata-level file replacement.
     """
-    fmt = fmt or ("delta" if HAS_DELTA else "parquet")
+    fmt = fmt or DEFAULT_FORMAT
 
     if check_constraint_enabled:
         _enforce_checks(
@@ -571,12 +570,5 @@ def replace_where(
             "evolve schemas"
         )
     kept = target.filter(~F.coalesce(F.expr(predicate), F.lit(False)))
-    merged = kept.unionByName(df)
-
-    staging = f"{target_path}__staging_{uuid.uuid4().hex[:8]}"
-    merged.write.mode("overwrite").format(fmt).save(staging)
-    backup = f"{target_path}__old_{uuid.uuid4().hex[:8]}"
-    os.rename(target_path, backup)
-    os.rename(staging, target_path)
-    shutil.rmtree(backup)
+    _staged_swap(kept.unionByName(df), target_path, fmt)
     return spark.read.format(fmt).load(target_path)
