@@ -7,13 +7,18 @@ DuckDB and timing core.
   order-insensitive value hash (``waterbear_spark.testing``). Exits 1 on
   any failure; ``--out`` writes the per-query results as JSON.
 * ``time``    — min-of-N wall time per query into the noop sink, one
-  session, cache cleared between reps (``bench.py``'s per-query timing).
+  session, each rep run in a query scope (``bench.py``'s per-query
+  timing).
 * ``explain`` — formatted physical plans. With query names, one file per
   query under ``--out``; with none, the repo's PLANS.md regenerated from
   SHOWCASE.
 * ``scaling`` — the HEAVY queries timed at a small and a big scale, with
   the big/small ratio and a grade per query (``make_sf1.py`` builds the
   10x scale); prints one JSON line.
+
+``oracle``, ``time`` and ``scaling`` run each query inside
+``waterbear_spark.scope.query_scope``, so no query's caches or
+checkpoints reach the next one.
 
 Usage::
 
@@ -46,6 +51,7 @@ from waterbear_spark.conf import session
 from waterbear_spark.queries import llm
 from waterbear_spark.queries.catalog import ORACLE_SQL, QUERIES
 from waterbear_spark.queries.tables import TABLES, table
+from waterbear_spark.scope import query_scope
 from waterbear_spark.testing import compare_frames, row_lines
 
 # ---------------------------------------------------------------- core
@@ -67,15 +73,16 @@ def _warm_jvm(spark) -> None:
 
 
 def _min_of(spark, fn, sf_dir: str, reps: int, warmup: int = 0):
-    """(min over the timed reps, every rep's seconds): each rep clears the
-    cache and writes the query into the noop sink; the first ``warmup``
-    reps pay codegen and file listing and are left out of the min."""
+    """(min over the timed reps, every rep's seconds): each rep writes the
+    query into the noop sink in its own query scope, whose release is
+    not timed; the first ``warmup`` reps pay codegen and file listing
+    and are left out of the min."""
     times = []
     for _ in range(warmup + reps):
-        spark.catalog.clearCache()
-        t0 = time.perf_counter()
-        fn(spark, sf_dir).write.mode("overwrite").format("noop").save()
-        times.append(round(time.perf_counter() - t0, 3))
+        with query_scope(spark):
+            t0 = time.perf_counter()
+            fn(spark, sf_dir).write.mode("overwrite").format("noop").save()
+            times.append(round(time.perf_counter() - t0, 3))
     return min(times[warmup:]), times
 
 
@@ -89,8 +96,9 @@ def cmd_oracle(spark, args) -> int:
     for name in names:
         t0 = time.time()
         try:
-            sdf = QUERIES[name](spark, args.sf)
-            s_cols, s_rows = sdf.columns, [tuple(r) for r in sdf.collect()]
+            with query_scope(spark):
+                sdf = QUERIES[name](spark, args.sf)
+                s_cols, s_rows = sdf.columns, [tuple(r) for r in sdf.collect()]
         except Exception as err:
             results[name] = {"status": "spark_error", "err": str(err)[:300]}
             print(f"FAIL  {name}: spark error: {err}")

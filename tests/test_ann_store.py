@@ -19,6 +19,7 @@ import os
 from pyspark.sql import functions as F
 
 from tests.conftest import SF_SMOKE
+from waterbear_spark import scope
 from waterbear_spark.sources import ann_index as store
 
 
@@ -151,7 +152,7 @@ def test_staged_ivf_equals_fresh_build(spark, tmp_path, monkeypatch):
     from waterbear_spark.queries import llm
 
     monkeypatch.setenv("SPARK_GRAFT_ANN_INDEX_DIR", str(tmp_path))
-    llm._IVF_MEMO.clear()
+    scope.forget()
     built_cells, built_cent, params = llm._ivf_index(spark, SF_SMOKE)
     built = (_fp_rows(built_cells), _fp_rows(built_cent))
     # the stage must exist and carry the dials
@@ -159,7 +160,7 @@ def test_staged_ivf_equals_fresh_build(spark, tmp_path, monkeypatch):
     meta = json.load(open(os.path.join(slug_dir, "meta.json")))
     assert meta["meta"]["k1"] == params["k1"]
 
-    llm._IVF_MEMO.clear()  # new "session": must hit the staged path
+    scope.forget()  # new "session": must hit the staged path
     staged_cells, staged_cent, params2 = llm._ivf_index(spark, SF_SMOKE)
     assert params2 == params
     assert (_fp_rows(staged_cells), _fp_rows(staged_cent)) == built
@@ -167,7 +168,7 @@ def test_staged_ivf_equals_fresh_build(spark, tmp_path, monkeypatch):
     built_cent.unpersist()
     staged_cells.unpersist()
     staged_cent.unpersist()
-    llm._IVF_MEMO.clear()
+    scope.forget()
 
 
 def test_rebuild_path_serves_staged_relations(spark, tmp_path, monkeypatch):
@@ -180,8 +181,7 @@ def test_rebuild_path_serves_staged_relations(spark, tmp_path, monkeypatch):
     from waterbear_spark.queries import llm, wave20, wave30
 
     monkeypatch.setenv("SPARK_GRAFT_ANN_INDEX_DIR", str(tmp_path))
-    llm._IVF_MEMO.clear()
-    wave20._PQ_MEMO.clear()
+    scope.forget()
     try:
         cells, cent, _params = llm._ivf_index(spark, SF_SMOKE)
         codes, cb = wave20._pq_codes(spark, SF_SMOKE)
@@ -199,5 +199,4 @@ def test_rebuild_path_serves_staged_relations(spark, tmp_path, monkeypatch):
         assert "BroadcastNestedLoopJoin" not in manifest_plan
     finally:
         spark.catalog.clearCache()
-        llm._IVF_MEMO.clear()
-        wave20._PQ_MEMO.clear()
+        scope.forget()

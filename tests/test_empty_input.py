@@ -4,7 +4,8 @@ routine at 100 TB (a filter that eliminates a day, a new tenant, a
 just-created stream) — an operator that throws on empty input is a
 pager at 3am. Row counts may legitimately be 0 or small (global
 aggregates produce one row of nulls/zeros); the contract here is "no
-crash", plus schema stability against the non-empty run."""
+crash", plus schema stability against the non-empty run. Each query runs
+inside ``query_scope`` and must leave no persisted RDD behind."""
 
 import os
 
@@ -14,6 +15,7 @@ from pyspark.sql import functions as F
 from tests.conftest import SF_SMOKE
 from waterbear_spark.queries.catalog import QUERIES
 from waterbear_spark.queries.tables import TABLES, table
+from waterbear_spark.scope import persisted_ids, query_scope
 
 # iterative/loop queries whose fixpoint scaffolding is exercised
 # elsewhere and which would spend many empty jobs here — still required
@@ -36,10 +38,16 @@ def empty_sf(spark, tmp_path_factory):
     "name", sorted(n for n in QUERIES if n not in _SLOW)
 )
 def test_runs_on_empty_input(spark, empty_sf, name):
-    df = QUERIES[name](spark, empty_sf)
-    rows = df.collect()
+    before = persisted_ids(spark)
+    with query_scope(spark):
+        df = QUERIES[name](spark, empty_sf)
+        rows = df.collect()
     assert rows is not None  # completing without raising is the contract
+    assert persisted_ids(spark) - before == set()
 
 
 def test_sampled_iterative_on_empty(spark, empty_sf):
-    QUERIES["ann_ivf_kmeans"](spark, empty_sf).collect()
+    before = persisted_ids(spark)
+    with query_scope(spark):
+        QUERIES["ann_ivf_kmeans"](spark, empty_sf).collect()
+    assert persisted_ids(spark) - before == set()

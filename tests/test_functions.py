@@ -1,6 +1,10 @@
 """Pandas-UDF surface + multimodal plumbing tests."""
 
 import math
+import os
+import subprocess
+import sys
+import textwrap
 
 import pytest
 from pyspark.sql import functions as F
@@ -211,3 +215,31 @@ def test_wav_metadata_parsed_jvm_side(spark):
     assert out == {"a": (2, 44100), "b": (1, 16000), "c": (None, None)}
     plan = wav_metadata(df)._jdf.queryExecution().executedPlan().toString()
     assert "Python" not in plan
+
+
+def test_udtf_query_runs_off_the_repo_path(tmp_path):
+    """A UDTF query runs when the Python workers cannot import the
+    package: the driver puts the repo on ``sys.path`` itself (no
+    ``PYTHONPATH``) and runs from a directory outside the repo, as
+    ``bench.py`` does. Before the package was pickled by value, the
+    worker failed with ``ModuleNotFoundError: waterbear_spark``."""
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    script = textwrap.dedent(
+        f"""
+        import sys
+        sys.path.insert(0, {repo!r})
+        from waterbear_spark.conf import session
+        from waterbear_spark.queries.catalog import QUERIES
+        spark = session(2, driver_memory="1g")
+        print("rows", QUERIES["udtf_tokenize"](spark, {SF_SMOKE!r}).count())
+        spark.stop()
+        """
+    )
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    proc = subprocess.run(
+        [sys.executable, "-c", script],
+        cwd=tmp_path, env=env, capture_output=True, text=True, timeout=300,
+    )
+    assert proc.returncode == 0, proc.stderr[-2000:]
+    assert "ModuleNotFoundError" not in proc.stderr
+    assert int(proc.stdout.split("rows")[-1]) > 0

@@ -19,6 +19,7 @@ from pyspark.sql import functions as F
 
 from tests.conftest import SF_SMOKE
 
+from waterbear_spark import scope
 from waterbear_spark.queries import llm, wave20
 from waterbear_spark.testing import compare_frames
 
@@ -38,11 +39,9 @@ def sparse_corpus(spark, tmp_path, monkeypatch):
     spark.createDataFrame(
         rows, "vec_id long, embedding array<float>"
     ).write.parquet(os.path.join(sf_dir, "embeddings.parquet"))
-    llm._IVF_MEMO.clear()
-    wave20._PQ_MEMO.clear()
+    scope.forget()
     yield sf_dir
-    llm._IVF_MEMO.clear()
-    wave20._PQ_MEMO.clear()
+    scope.forget()
 
 
 def _duck(sf_dir: str, sql: str):

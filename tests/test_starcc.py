@@ -11,6 +11,7 @@ from pyspark.sql import functions as F
 from tests.conftest import SF_SMOKE
 from waterbear_spark.operators import starcc
 from waterbear_spark.operators.starcc import star_connected_components
+from waterbear_spark.scope import persisted_ids
 
 
 def _union_find_components(edges):
@@ -43,10 +44,6 @@ def _check(spark, edges):
     }
     want = set(_union_find_components(edges).items())
     assert got == want
-
-
-def _persisted(spark):
-    return set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
 
 
 def test_chain_graph_high_diameter(spark):
@@ -89,11 +86,11 @@ def test_warm_call_leaves_no_persisted_rdds(spark, name):
     from waterbear_spark.queries.catalog import QUERIES
 
     spark.catalog.clearCache()
-    before = _persisted(spark)
+    before = persisted_ids(spark)
     QUERIES[name](spark, SF_SMOKE).collect()
-    assert _persisted(spark) == before, "first call"
+    assert persisted_ids(spark) == before, "first call"
     QUERIES[name](spark, SF_SMOKE).collect()
-    assert _persisted(spark) == before, "warm call"
+    assert persisted_ids(spark) == before, "warm call"
 
 
 def test_lateral_decorrelates_to_window_join(spark):
@@ -175,6 +172,6 @@ def test_star_tier_keeps_only_its_last_checkpoint(spark, monkeypatch):
     monkeypatch.setattr(starcc, "DRIVER_MAX_EDGES", 0)
     df = spark.createDataFrame([(i, i + 1) for i in range(60)], "src long, dst long")
     star_connected_components(df).collect()
-    before = _persisted(spark)
+    before = persisted_ids(spark)
     star_connected_components(df).collect()
-    assert len(_persisted(spark) - before) <= 1
+    assert len(persisted_ids(spark) - before) <= 1

@@ -28,6 +28,7 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from waterbear_spark import scope
 from waterbear_spark.queries.tables import table
 
 _TE_M = 20.0
@@ -78,7 +79,7 @@ def model_eval(spark: SparkSession, sf_dir: str) -> tuple[EvalReport, DataFrame]
         .cast("bigint")
         % 100
     )
-    rows = rows.withColumn("is_train", bucket < _TRAIN_PCT).persist()
+    rows = scope.persist(rows.withColumn("is_train", bucket < _TRAIN_PCT))
     train = rows.filter("is_train")
     test = rows.filter(~F.col("is_train"))
 
@@ -91,7 +92,7 @@ def model_eval(spark: SparkSession, sf_dir: str) -> tuple[EvalReport, DataFrame]
     prior = train.agg(
         (F.sum("y").cast("double") / F.count(F.lit(1))).alias("p")
     ).collect()[0]["p"]
-    scored = (
+    scored = scope.persist(
         test.join(F.broadcast(enc_p), "o_orderpriority", "left")
         .join(F.broadcast(enc_s), "c_mktsegment", "left")
         .select(
@@ -105,7 +106,7 @@ def model_eval(spark: SparkSession, sf_dir: str) -> tuple[EvalReport, DataFrame]
                 / 2.0
             ).alias("score"),
         )
-    ).persist()
+    )
 
     # score-value relation: |distinct scores| rows (25 here) — every
     # evaluation statistic reads THIS, never a row-level sort

@@ -24,6 +24,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from waterbear_spark import scope
+
 # Largest distinct-edge count computed by the driver tier: <= 65536
 # 16-byte rows, ~1 MB per collect. Measured on the 256-edge sf0.1 near-dup
 # graph, the union-find takes ~0.05 s where a star round pays 3 shuffles
@@ -112,20 +114,19 @@ def star_connected_components(
     the tier; the cache is released before returning on either tier (the
     union-find result is a local frame, the star loop's result reads its
     last checkpoint), so the driver tier leaves no persisted RDD behind
-    and the star tier leaves one.
+    and the star tier leaves one, released with the query scope.
     ``max_rounds`` is a safety cap far above the O(log^2 n) bound;
     convergence is detected by the canonical edge set reaching a
     fixpoint (checked with one count per round — a scalar, not a collect
     of the edges).
     """
-    edges = (
+    edges = scope.persist(
         edges_df.select(
             F.col(src).cast("bigint").alias("u"),
             F.col(dst).cast("bigint").alias("v"),
         )
         .filter(F.col("u") != F.col("v"))
         .distinct()
-        .persist()
     )
     try:
         sig = _signature(edges)
@@ -135,7 +136,7 @@ def star_connected_components(
             return _driver_components(edges, edges_df.sparkSession)
         return _star_loop(edges, sig, max_rounds)
     finally:
-        edges.unpersist()
+        scope.release(edges)
 
 
 def _signature(e: DataFrame):
@@ -152,28 +153,15 @@ def _signature(e: DataFrame):
     return tuple(row)
 
 
-def _checkpoint(df: DataFrame) -> tuple[DataFrame, int | None]:
-    """Eager ``localCheckpoint`` of ``df``, plus the id of the persisted
-    RDD that holds its blocks (``DataFrame.unpersist`` never reaches
-    them: a checkpoint is not a cache entry). The id is None when another
-    thread persisted an RDD meanwhile, since the two cannot be told apart."""
-    jsc = df.sparkSession.sparkContext._jsc
-    before = set(jsc.getPersistentRDDs().keySet())
-    ckpt = df.localCheckpoint()
-    new = set(jsc.getPersistentRDDs().keySet()) - before
-    return ckpt, (new.pop() if len(new) == 1 else None)
-
-
 def _star_loop(edges: DataFrame, sig: tuple, max_rounds: int) -> DataFrame:
     """Alternating large-star/small-star to a fixpoint; each round's
     edges are checkpointed, so the result no longer reads ``edges``. A
     superseded round's checkpoint is released once the next round is
     materialized and compared, so only the last one, which the result
-    reads, stays persisted."""
-    jsc = edges.sparkSession.sparkContext._jsc
-    edges_id = None  # the caller owns, and releases, the input edges
+    reads, stays persisted (the first round releases the input edges the
+    same way)."""
     for _ in range(max_rounds):
-        after, after_id = _checkpoint(_small_star(_large_star(edges)))
+        after = scope.checkpoint(_small_star(_large_star(edges)))
         new_sig = _signature(after)
         changed = 1
         if new_sig == sig:
@@ -185,9 +173,8 @@ def _star_loop(edges: DataFrame, sig: tuple, max_rounds: int) -> DataFrame:
                 after.join(edges, ["u", "v"], "left_anti").limit(1).count()
                 + edges.join(after, ["u", "v"], "left_anti").limit(1).count()
             )
-        if edges_id is not None:
-            jsc.getPersistentRDDs().get(edges_id).unpersist(False)
-        edges, edges_id, sig = after, after_id, new_sig
+        scope.release(edges)
+        edges, sig = after, new_sig
         if changed == 0:
             break
     return (

@@ -24,6 +24,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from waterbear_spark import scope
 from waterbear_spark.queries.tables import DEC, epoch_us, table
 
 _FUNNEL_STEPS = ("view", "click", "purchase")
@@ -929,8 +930,10 @@ def rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     # rows as parallel subtrees of one job (they share the persisted
     # feats scan) and attach all three tiles in a single projection —
     # nesting whole tilings serially instead costs ~3x the stage depth
-    # for identical values
-    feats = (
+    # for identical values. Materialized BEFORE the parallel boundary
+    # subtrees: they kick off as concurrent broadcast jobs, and racing on
+    # a cold cache would re-derive the customer aggregate once per subtree
+    feats = scope.persist(
         per_cust.crossJoin(F.broadcast(anchor))
         .select(
             "o_custkey",
@@ -939,13 +942,9 @@ def rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
             ),
             "frequency",
             "monetary_cents",
-        )
-        .persist()
+        ),
+        eager=True,
     )
-    # materialize BEFORE the parallel boundary subtrees: they kick off
-    # as concurrent broadcast jobs, and racing on a cold cache would
-    # re-derive the customer aggregate once per subtree
-    feats.count()
     b_r = ntile_bounds(
         feats, "recency_days", "o_custkey", 5, width=16.0, bnds_col="__b_r"
     )

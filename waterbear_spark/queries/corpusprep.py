@@ -13,6 +13,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from waterbear_spark import scope
 from waterbear_spark.queries.llm import (
     N_BANDS,
     N_HASHES,
@@ -671,16 +672,13 @@ def quantile_normalize_lengths(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # persisted: the pooled and per-source aggregates below would each
     # re-derive docs plus all four boundary subtrees otherwise (the
-    # plan showed the whole tiling duplicated per consumer). No matching
-    # unpersist — the returned plan reads it lazily; entry lives until
-    # session end / LRU eviction (one session per bench pass)
-    tiled = (
+    # plan showed the whole tiling duplicated per consumer)
+    tiled = scope.persist(
         docs.join(F.broadcast(b_src), ["source"], "left")
         .crossJoin(F.broadcast(b_pool))
         .withColumn("src_decile", ntile_tile_expr("__b_s", "n_chars", "doc_id"))
         .withColumn("pool_decile", ntile_tile_expr("__b_p", "n_chars", "doc_id"))
         .select("source", "n_chars", "src_decile", "pool_decile")
-        .persist()
     )
     pooled = (
         tiled.groupBy("pool_decile")
@@ -834,10 +832,8 @@ def dup_span_census(spark: SparkSession, sf_dir: str) -> DataFrame:
     # binary digests (16 bytes vs 32-char hex — bijective, so the digest
     # census groups identically); persisted, because the plan otherwise
     # re-derives the one-md5-per-corpus-token pass once per consumer
-    # (shared census, run-length semi join, per-doc totals = 3 scans).
-    # No matching unpersist — the returned plan reads it lazily; entry
-    # lives until session end / LRU eviction (one session per bench pass)
-    wins = arr.select(
+    # (shared census, run-length semi join, per-doc totals = 3 scans)
+    wins = scope.persist(arr.select(
         "doc_id",
         F.posexplode(
             F.transform(
@@ -847,7 +843,7 @@ def dup_span_census(spark: SparkSession, sf_dir: str) -> DataFrame:
                 ),
             )
         ).alias("pos", "dig"),
-    ).persist()
+    ))
     shared = (
         wins.groupBy("dig")
         .agg(F.min("doc_id").alias("mn"), F.max("doc_id").alias("mx"))

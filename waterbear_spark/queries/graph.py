@@ -16,6 +16,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from waterbear_spark import scope
 from waterbear_spark.queries.tables import table
 
 _SCALE = 10**12  # rank fixed-point unit
@@ -47,7 +48,7 @@ def _pagerank_setup(
         .select("o_custkey", "l_suppkey")
         .distinct()
     )
-    edges = pairs.select(
+    edges = scope.persist(pairs.select(
         F.explode(
             F.array(
                 F.struct(
@@ -60,9 +61,9 @@ def _pagerank_setup(
                 ),
             )
         ).alias("e")
-    ).select("e.src", "e.dst").persist()
+    ).select("e.src", "e.dst"))
     deg = edges.groupBy("src").agg(F.count(F.lit(1)).alias("deg"))
-    edges_deg = edges.join(F.broadcast(deg), "src").persist()
+    edges_deg = scope.persist(edges.join(F.broadcast(deg), "src"))
     # node list = out-degree keys (symmetric graph: every node has >= 1
     # out-edge), same key set as the old cdeg+supp union
     nodes = deg.select(F.col("src").alias("node"))
@@ -121,12 +122,13 @@ def pagerank_bipartite(spark: SparkSession, sf_dir: str) -> DataFrame:
         # re-planning), while checkpointed rounds measure flat 0.6 s each
         # (PAGERANK_ROUNDS.json) — and at 100 TB per-round
         # materialization is the standard Pregel discipline anyway.
-        # eager=False keeps construction lazy (advice r5: the default
-        # eager checkpoint made merely building this DataFrame run all
-        # 5 iteration jobs, e.g. under ``graft.py explain``);
-        # each round still materializes exactly once at the first action
-        ranks = _pagerank_round(edges_deg, ranks, base).localCheckpoint(
-            eager=False
+        # eager=False does not keep construction lazy: under AQE,
+        # creating each round's checkpoint RDD runs that round's query
+        # stages, so merely building this frame fires Spark jobs (22
+        # cold and 20 warm at sf0.01; perfbench's queries.build_jobs
+        # reads 20)
+        ranks = scope.checkpoint(
+            _pagerank_round(edges_deg, ranks, base), eager=False
         )
     return (
         ranks.filter(F.col("node") >= _SUPP_OFF)

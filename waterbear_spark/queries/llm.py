@@ -21,6 +21,7 @@ import math
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from waterbear_spark import scope
 from waterbear_spark.queries.tables import (
     DEC,
     davg,
@@ -181,10 +182,8 @@ def _band_candidates(
         # fold over the shingle sets runs once, not once more per
         # consumer — the uncapped self-join dedupes its two sides via
         # exchange reuse, but the groupBy shape does not share that
-        # exchange (r10 advisor finding). Left cached like the shingle
-        # frame in dedup_near_minhash: the candidate join is lazy, so
-        # an eager unpersist here would just force recomputation.
-        bands = bands.persist()
+        # exchange (r10 advisor finding).
+        bands = scope.persist(bands)
         deg = bands.groupBy("band", "bkey").agg(
             F.count(F.lit(1)).alias("__deg")
         )
@@ -273,14 +272,13 @@ def _near_dup_pairs(
     ).select("doc_id", _tokens(F.col("text")).alias("toks"))
     # the shingle-set frame is reused three times (hashing + both sides of
     # the verify join); persist it so shingling runs once
-    sets = (
+    sets = scope.persist(
         docs.filter(F.size("toks") >= 3)
         .select(
             "doc_id",
             F.array_distinct(_shingles(F.col("toks"))).alias("arr"),
         )
         .withColumn("n", F.size("arr"))
-        .persist()
     )
     sig = sets.select("doc_id", _minhash_struct("arr").alias("mh")).select(
         "doc_id", "mh.*"
@@ -475,7 +473,7 @@ def _near_dup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
             pairs.select("doc_a", "doc_b"), src="doc_a", dst="doc_b"
         )
     finally:
-        sets.unpersist()
+        scope.release(sets)
 
 
 def dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -652,9 +650,9 @@ def decontaminate_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("doc_id", _tokens(F.col("text")).alias("toks"))
         .filter(F.size("toks") >= 3)
     )
-    shingled = docs.select(
+    shingled = scope.persist(docs.select(
         "doc_id", F.array_distinct(_shingles(F.col("toks"))).alias("arr")
-    ).persist()
+    ))
     bench = (
         shingled.filter(F.col("doc_id") < 10)
         .select(F.explode("arr").alias("s"))
@@ -722,41 +720,19 @@ ORDER BY doc_id
 # similarity search
 # ---------------------------------------------------------------------------
 
-_DIM_MEMO: dict = {}
-
-
+@scope.memoised
 def _embedding_dim(spark: SparkSession, sf_dir: str) -> int:
     """Vector width (driver-side metadata lookup, one 1-row job,
     memoised per application + corpus — ~a dozen queries ask). An
     empty table yields a 1-dim placeholder: every consumer's row-local
     math stays well-formed and produces zero rows either way."""
-    key = (spark.sparkContext.applicationId, str(sf_dir))
-    hit = _DIM_MEMO.get(key)
-    if hit is not None:
-        return hit
     row = (
         table(spark, sf_dir, "embeddings")
         .select(F.size("embedding").alias("d"))
         .first()
     )
-    dim = row["d"] if row is not None else 1
-    _DIM_MEMO[key] = dim
-    return dim
+    return row["d"] if row is not None else 1
 
-
-def _dot_expr(a: str, b: str, dim: int) -> Column:
-    """Dot product as a sequential left fold — the same IEEE evaluation
-    order as DuckDB's list_dot_product, so results are bit-identical to
-    the oracle. (A flat 64-term element_at expression was tried and is
-    ~3x SLOWER: the giant expression tree exceeds codegen method limits
-    and falls back to per-node interpreted eval; the higher-order fold is
-    one interpreted loop and wins. dim is unused but kept for the
-    signature of the flat variant.)
-    """
-    del dim
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0), lambda acc, x: acc + x
-    )
 
 def embedding_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Brute-force cosine top-5 neighbours for 5 query vectors.
@@ -769,12 +745,11 @@ def embedding_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     — the same IEEE sequence DuckDB's list_dot_product runs, then rounded
     to 4 decimals with vec_id tie-breaks for deterministic membership.
     """
-    dim = _embedding_dim(spark, sf_dir)
     emb = table(spark, sf_dir, "embeddings").select(
         "vec_id",
         F.transform("embedding", lambda x: x.cast("double")).alias("v"),
     )
-    emb = emb.withColumn("nrm", F.sqrt(_dot_expr("v", "v", dim)))
+    emb = emb.withColumn("nrm", F.sqrt(_fold_dot("v", "v")))
     queries = (
         emb.filter(F.col("vec_id") < 5)
         .select(
@@ -783,7 +758,7 @@ def embedding_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("nrm").alias("qn"),
         )
     )
-    dot = _dot_expr("qv", "v", dim)
+    dot = _fold_dot("qv", "v")
     pairs = (
         emb.crossJoin(F.broadcast(queries))
         .filter(F.col("vec_id") != F.col("query_id"))
@@ -927,9 +902,6 @@ _IVF_K = 8  # FLOOR on the TOTAL cell count — the count scales with n (below)
 _IVF_TARGET_CELL = 2048  # target vectors/cell: bounds per-cell pair work
 _IVF_ITERS = 3  # assignment passes per level; centroid updates run ITERS-1 times
 
-# (applicationId, sf_dir) -> (cells, centroids, params): the five IVF
-# auditing queries share one index build per session instead of five
-_IVF_MEMO: dict = {}
 _IVF_TRAIN_FLOOR = 16384  # minimum training-sample size (a vec_id prefix)
 _IVF_TRAIN_PER_CELL = 32  # training rows per target cell above the floor
 
@@ -974,7 +946,11 @@ def _ivf_train_cap(n: int) -> int:
 def _fold_dot(a, b) -> Column:
     """Sequential left-fold dot product of two array columns — the same
     IEEE summation order as DuckDB's ``list_dot_product``, so scores
-    match the oracle bit for bit."""
+    match the oracle bit for bit. The package's one dot product. (A flat
+    64-term element_at expression was tried and is ~3x SLOWER: the giant
+    expression tree exceeds codegen method limits and falls back to
+    per-node interpreted eval; the higher-order fold is one interpreted
+    loop and wins.)"""
     return F.aggregate(
         F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0), lambda s, x: s + x
     )
@@ -1051,6 +1027,7 @@ def _km_update(assigned: DataFrame, keys: tuple[str, ...] = ()) -> DataFrame:
     )
 
 
+@scope.memoised
 def _ivf_index(
     spark: SparkSession, sf_dir: str
 ) -> tuple[DataFrame, DataFrame, dict]:
@@ -1105,10 +1082,6 @@ def _ivf_index(
     """
     from waterbear_spark.sources import ann_index as _store
 
-    memo_key = (spark.sparkContext.applicationId, str(sf_dir))
-    hit = _IVF_MEMO.get(memo_key)
-    if hit is not None:
-        return hit
     fp = _store.corpus_fingerprint(spark, sf_dir)
     n = fp["n"]
     k1, k2 = _ivf_k12(n)
@@ -1121,32 +1094,24 @@ def _ivf_index(
             "vec_id",
             F.transform("embedding", lambda x: x.cast("double")).alias("v"),
         )
-        out = (
+        return (
             empty.select("vec_id", F.lit(None).cast("int").alias("cell")),
             spark.createDataFrame([], "cluster int, c array<double>"),
             params,
         )
-        _IVF_MEMO[memo_key] = out
-        return out
     stage_dir = _store.component_dir(sf_dir, "ivf")
     stage_meta = {**fp, "k1": k1, "k2": k2, "cap": cap, "iters": _IVF_ITERS}
     staged = _store.staged_read(spark, stage_dir, stage_meta)
     if staged is not None:
-        cells = staged["cells"].persist()
-        centroids = staged["centroids"].persist()
-        cells.count()
-        centroids.count()
-        out = (cells, centroids, params)
-        _IVF_MEMO[memo_key] = out
-        return out
-    emb = (
-        table(spark, sf_dir, "embeddings")
-        .select(
+        cells = scope.persist(staged["cells"], eager=True)
+        centroids = scope.persist(staged["centroids"], eager=True)
+        return cells, centroids, params
+    emb = scope.persist(
+        table(spark, sf_dir, "embeddings").select(
             "vec_id", F.transform("embedding", lambda x: x.cast("double")).alias("v")
-        )
-        .persist()
+        ),
+        eager=True,
     )
-    emb.count()  # materializes the persisted cache
     # sparse-id guard (r10, in lockstep with wave20._pq_codes): an
     # all-ids-above-cap corpus has an empty training prefix — train on
     # the full relation instead of seeding nothing. min_vec_id rides
@@ -1171,8 +1136,8 @@ def _ivf_index(
     for _ in range(_IVF_ITERS - 1):
         # lazy lineage cut per round: the k1-row centroid relation is
         # checkpointed on first use, keeping plans iteration-independent
-        cent = _km_update(_km_assign(samp, cent)).localCheckpoint(eager=False)
-    ac = _km_assign(emb, cent).withColumnRenamed("cluster", "coarse").persist()
+        cent = scope.checkpoint(_km_update(_km_assign(samp, cent)), eager=False)
+    ac = scope.persist(_km_assign(emb, cent).withColumnRenamed("cluster", "coarse"))
 
     if fp["min_vec_id"] is not None and fp["min_vec_id"] < cap:
         sc = ac.filter(F.col("vec_id") < cap)
@@ -1189,9 +1154,9 @@ def _ivf_index(
         .withColumn("cc", _fold_dot("c", "c"))
     )
     for _ in range(_IVF_ITERS - 1):
-        cent2 = _km_update(
-            _km_assign(sc, cent2, ("coarse",)), ("coarse",)
-        ).localCheckpoint(eager=False)
+        cent2 = scope.checkpoint(
+            _km_update(_km_assign(sc, cent2, ("coarse",)), ("coarse",)), eager=False
+        )
     fine = _km_assign(ac, cent2, ("coarse",))
 
     cells = fine.select(
@@ -1209,12 +1174,9 @@ def _ivf_index(
     # materialize the small outputs, then release the build's working
     # caches (the full vector relation and the coarse assignment) so a
     # long-lived session doesn't accumulate corpus-sized storage blocks
-    cells = cells.persist()
-    centroids = centroids.persist()
-    cells.count()
-    centroids.count()
-    ac.unpersist()
-    emb.unpersist()
+    cells = scope.persist(cells, eager=True)
+    centroids = scope.persist(centroids, eager=True)
+    scope.release(ac, emb)
     _store.staged_write(
         spark, stage_dir, {"cells": cells, "centroids": centroids}, stage_meta
     )
@@ -1227,15 +1189,10 @@ def _ivf_index(
     # race ``staged_read`` returns None and the build frames serve.
     served = _store.staged_read(spark, stage_dir, stage_meta)
     if served is not None:
-        cells.unpersist()
-        centroids.unpersist()
-        cells = served["cells"].persist()
-        centroids = served["centroids"].persist()
-        cells.count()
-        centroids.count()
-    out = (cells, centroids, params)
-    _IVF_MEMO[memo_key] = out
-    return out
+        scope.release(cells, centroids)
+        cells = scope.persist(served["cells"], eager=True)
+        centroids = scope.persist(served["centroids"], eager=True)
+    return cells, centroids, params
 
 
 def _ivf_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1433,15 +1390,7 @@ def _hyperplane_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
     plane = lambda j: _plane_components(j, dim)  # noqa: E731
 
     planes = [
-        F.aggregate(
-            F.zip_with(
-                "v",
-                F.array(*[F.lit(c) for c in plane(j)]),
-                lambda x, y: x * y,
-            ),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
+        _fold_dot("v", F.array(*[F.lit(c) for c in plane(j)]))
         for j in range(N_PLANES)
     ]
     bucket = sum(
@@ -1480,9 +1429,7 @@ def ann_hyperplane_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("bucket").alias("b_bucket"), F.col("vec_id").alias("b_id"),
         F.col("v").alias("bv"), F.col("nrm").alias("bn"),
     )
-    dot = F.aggregate(
-        F.zip_with("av", "bv", lambda x, y: x * y), F.lit(0.0), lambda acc, x: acc + x
-    )
+    dot = _fold_dot("av", "bv")
     pairs = (
         a.join(b, (F.col("bucket") == F.col("b_bucket")) & (F.col("a_id") < F.col("b_id")))
         .select(
@@ -1720,15 +1667,7 @@ def dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.transform("embedding", lambda x: x.cast("double")).alias("v"),
     )
     planes = [
-        F.aggregate(
-            F.zip_with(
-                "v",
-                F.array(*[F.lit(c) for c in _plane_components(j, dim)]),
-                lambda x, y: x * y,
-            ),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
+        _fold_dot("v", F.array(*[F.lit(c) for c in _plane_components(j, dim)]))
         for j in range(N_PLANES)
     ]
     per_band = N_PLANES // _N_BANDS
@@ -1846,7 +1785,7 @@ def prefix_join_pairs(raw_docs: DataFrame) -> DataFrame:
     # persist the shingle sets: the frame fans out into the
     # document-frequency count AND the per-doc reorder, and without the
     # cache each branch re-pays the full parquet scan + shingling
-    docs = (
+    docs = scope.persist(
         raw_docs
         .select("doc_id", _tokens(F.col("text")).alias("toks"))
         .filter(F.size("toks") >= 3)
@@ -1854,11 +1793,10 @@ def prefix_join_pairs(raw_docs: DataFrame) -> DataFrame:
             "doc_id",
             F.array_distinct(_shingles(F.col("toks"))).alias("toks"),
         )
-        .persist()
     )
     toks = docs.select("doc_id", F.explode("toks").alias("tok"))
     df_counts = toks.groupBy("tok").agg(F.count(F.lit(1)).alias("df"))
-    ordered = (
+    ordered = scope.persist(
         toks.join(df_counts, "tok")
         .groupBy("doc_id")
         .agg(
@@ -1871,7 +1809,6 @@ def prefix_join_pairs(raw_docs: DataFrame) -> DataFrame:
         .withColumn(
             "plen", F.col("n") - F.ceil(F.col("n") * F.lit(_PP_TAU)) + 1
         )
-        .persist()
     )
     prefixes = ordered.select(
         "doc_id", F.explode(F.slice("arr", 1, F.col("plen"))).alias("tok")
@@ -1967,13 +1904,12 @@ def ngram_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         "array_distinct(transform(arr,"
         " g -> CAST(CONV(SUBSTR(md5(g), 1, 15), 16, 10) AS BIGINT)))"
     )
-    sets = (
+    sets = scope.persist(
         docs.select("doc_id", grams.alias("arr"))
         .withColumn("block", F.concat(seeded_min(0), seeded_min(1), seeded_min(2)))
         .withColumn("harr", gram_hash)
         .withColumn("n", F.size("harr"))
         .select("doc_id", "block", "harr", "n")
-        .persist()
     )
 
     cand = (

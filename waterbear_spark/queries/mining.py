@@ -17,6 +17,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from waterbear_spark import scope
 from waterbear_spark.queries.tables import table
 
 _SN_WINDOW = 5  # sorted-neighborhood width
@@ -176,12 +177,11 @@ def itemset_pair_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     # the basket relation fans out three ways (pairs, item supports,
     # order count) — persist so the grouping shuffle runs once
-    baskets = (
+    baskets = scope.persist(
         table(spark, sf_dir, "lineitem")
         .select("l_orderkey", "l_partkey")
         .groupBy("l_orderkey")
         .agg(F.array_sort(F.collect_set("l_partkey")).alias("items"))
-        .persist()
     )
     n_orders = baskets.agg(F.count(F.lit(1)).alias("n_orders"))
     item = (

@@ -16,37 +16,34 @@ import os
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from waterbear_spark import scope
+
 DEC = "decimal(20,6)"
 
 TABLES = (
     "region nation customer supplier part orders lineitem events documents embeddings"
 ).split()
 
-# (applicationId, path, dir-mtime) -> base DataFrame. ``spark.read.parquet``
-# runs a schema-inference job (a footer read) and builds a fresh file index
-# on EVERY call — ~0.2 s of driver+job overhead per table reference, paid
-# hundreds of times across the catalog. Production engines resolve tables
-# through a catalog/metastore exactly once; this memo is that shape. It
-# caches only the unresolved reader (schema + file list) — never data or
-# results: every action still recomputes from the parquet files. The
-# directory mtime keys the entry, so a rewritten table (tests stage fresh
-# corpora in place) re-lists instead of serving a stale file index.
-_TABLE_MEMO: dict = {}
-
 
 def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    """The reader of ``<sf_dir>/<name>.parquet``, memoised per
+    (application, path, dir-mtime). ``spark.read.parquet`` runs a
+    schema-inference job (a footer read) and builds a fresh file index
+    on EVERY call — ~0.2 s of driver+job overhead per table reference,
+    paid hundreds of times across the catalog. Production engines
+    resolve tables through a catalog/metastore exactly once; this memo
+    is that shape. It holds only the unresolved reader (schema + file
+    list) — never data or results: every action still recomputes from
+    the parquet files. The directory mtime keys the entry, so a
+    rewritten table (tests stage fresh corpora in place) re-lists
+    instead of serving a stale file index."""
     path = f"{sf_dir}/{name}.parquet"
     try:
         mtime = os.path.getmtime(path)
     except OSError:
         # absent table: fall through so the reader raises its usual error
         return spark.read.parquet(path)
-    key = (spark.sparkContext.applicationId, path, mtime)
-    df = _TABLE_MEMO.get(key)
-    if df is None:
-        df = spark.read.parquet(path)
-        _TABLE_MEMO[key] = df
-    return df
+    return scope.memo(spark, ("table", path, mtime), lambda: spark.read.parquet(path))
 
 
 def epoch_us(col: Column | str) -> Column:

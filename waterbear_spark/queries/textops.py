@@ -13,6 +13,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from waterbear_spark import scope
 from waterbear_spark.queries.llm import SHINGLES_SQL, TOKENS_SQL, _fan_out, _tokens
 from waterbear_spark.queries.tables import table
 
@@ -80,7 +81,7 @@ def simhash_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
             for b in range(SIMHASH_BITS)
         ],
     )
-    sketch = bits.select(
+    sketch = scope.persist(bits.select(
         "doc_id",
         sum(
             [
@@ -92,7 +93,7 @@ def simhash_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
             ],
             F.lit(0).cast("bigint"),
         ).alias("simhash"),
-    ).persist()
+    ))
 
     mask = (1 << SIMHASH_BAND_BITS) - 1
     band_entries = F.array(

@@ -16,6 +16,7 @@ from functools import reduce
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from waterbear_spark import scope
 from waterbear_spark.queries.tables import DEC, dsum, epoch_us, oracle_dsum, table
 
 _ROLL_DAYS = 7
@@ -1034,9 +1035,9 @@ def theil_sen_revenue_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
     # global index over the micro-relation (|days| rows — the one place
     # a single-partition window is free by construction, as in the ACF)
     w = Window.orderBy("day")
-    idx = daily.select(
+    idx = scope.persist(daily.select(
         "day", "cents", F.row_number().over(w).alias("i")
-    ).persist()
+    ))
     n = idx.agg(F.max("i").alias("n"))
     a = (
         idx.crossJoin(F.broadcast(n))
@@ -1062,7 +1063,7 @@ def theil_sen_revenue_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
     slope = (F.col("cents_b") - F.col("cents_a")) / F.datediff(
         "day_b", "day_a"
     )
-    sl = a.join(F.broadcast(b), "j").select(slope.alias("slope")).persist()
+    sl = scope.persist(a.join(F.broadcast(b), "j").select(slope.alias("slope")))
     # materialize the two shared relations BEFORE building the selection
     # phases below: their broadcast subtrees (n, b, stats, hits, med)
     # kick off as concurrent jobs at action time and, racing on a cold

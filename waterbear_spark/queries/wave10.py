@@ -31,6 +31,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from waterbear_spark import scope
 from waterbear_spark.queries.tables import DEC, table
 
 
@@ -333,7 +334,7 @@ def bigram_backoff_perplexity(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         ).alias("bg"),
     ).select("doc_id", F.col("bg.w1").alias("w1"), F.col("bg.w2").alias("w2"))
-    big = big.persist()
+    big = scope.persist(big)
     tr_big = train.filter(F.size("toks") >= 2).select(
         F.explode(
             F.transform(
@@ -351,7 +352,7 @@ def bigram_backoff_perplexity(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("w")
         .agg(F.count(F.lit(1)).alias("c1"))
     )
-    uni = uni.persist()
+    uni = scope.persist(uni)
     total = uni.agg(F.sum("c1").alias("total"))
     uni_lp = uni.crossJoin(F.broadcast(total)).select(
         F.col("w").alias("w2"),
@@ -520,9 +521,9 @@ def rrf_fusion(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = table(spark, sf_dir, "documents").select("doc_id", "text", "n_chars")
     score, cover = _eval_scores(_tokens(F.col("text")))
-    scored = docs.select(
+    scored = scope.persist(docs.select(
         "doc_id", score.alias("score"), cover.alias("cover"), "n_chars"
-    ).persist()
+    ))
     la = (
         scored.orderBy(F.col("score").desc(), "doc_id")
         .limit(_RRF_LIST)

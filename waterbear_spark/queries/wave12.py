@@ -53,6 +53,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from waterbear_spark import scope
 from waterbear_spark.queries.llm import TOKENS_SQL, _tokens
 from waterbear_spark.queries.tables import table
 
@@ -85,7 +86,7 @@ def kendall_tau_qty_disc(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("l_quantity").cast("int").alias("q"),
         F.round(F.col("l_discount") * 100).cast("int").alias("d"),
     )
-    cells = li.groupBy("q", "d").agg(F.count(F.lit(1)).alias("n")).persist()
+    cells = scope.persist(li.groupBy("q", "d").agg(F.count(F.lit(1)).alias("n")))
 
     a = cells.select(
         F.col("q").alias("qa"), F.col("d").alias("da"), F.col("n").alias("na")
@@ -409,9 +410,9 @@ def sparse_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         .drop("rk")
     )
     df_counts = capped.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
-    pruned = capped.join(
+    pruned = scope.persist(capped.join(
         df_counts.filter(F.col("df") <= _SC_MAXDF).select("term"), "term"
-    ).persist()
+    ))
     norms = pruned.groupBy("doc_id").agg(
         F.sum(F.col("tf") * F.col("tf")).alias("ss")
     )
@@ -669,9 +670,9 @@ def bpe_merge_rounds(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.length("w") >= 2) & F.col("w").rlike("^[a-z]+$")
     )
     vocab = words.groupBy("w").agg(F.count(F.lit(1)).alias("f"))
-    vocab = vocab.withColumn(
+    vocab = scope.persist(vocab.withColumn(
         "seq", F.trim(F.regexp_replace(F.col("w"), "(.)", "$1 "))
-    ).persist()
+    ))
 
     rules = []
     for rnd in range(1, _BPE_ROUNDS + 1):
@@ -715,7 +716,7 @@ def bpe_merge_rounds(spark: SparkSession, sf_dir: str) -> DataFrame:
                 " ",
             )
         )
-        vocab = vocab.withColumn("seq", merged).persist()
+        vocab = scope.persist(vocab.withColumn("seq", merged))
     return spark.createDataFrame(
         rules, "merge_round int, pair string, n bigint"
     ).orderBy("merge_round")

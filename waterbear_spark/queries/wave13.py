@@ -38,6 +38,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from waterbear_spark import scope
 from waterbear_spark.queries.graph import _WEDGES_CTE, und_edges_weighted
 from waterbear_spark.queries.llm import TOKENS_SQL, _tokens
 from waterbear_spark.queries.tables import epoch_us, table
@@ -131,7 +132,7 @@ def graph_jaccard_links(spark: SparkSession, sf_dir: str) -> DataFrame:
     (drop wedges through nodes above a degree bound) bolts onto the
     degree census.
     """
-    und = und_edges_weighted(spark, sf_dir).select("src", "dst").persist()
+    und = scope.persist(und_edges_weighted(spark, sf_dir).select("src", "dst"))
     deg = und.groupBy("src").agg(F.count(F.lit(1)).alias("deg"))
     e1 = und.select(F.col("dst").alias("a"), F.col("src").alias("x"))
     e2 = und.select(F.col("src").alias("x"), F.col("dst").alias("b"))
@@ -627,7 +628,7 @@ def typo_dedup_vocab(spark: SparkSession, sf_dir: str) -> DataFrame:
     words = docs.select(F.explode(_tokens(F.col("text"))).alias("w")).filter(
         F.col("w").rlike("^[a-z]{4,12}$")
     )
-    vocab = words.groupBy("w").agg(F.count(F.lit(1)).alias("f")).persist()
+    vocab = scope.persist(words.groupBy("w").agg(F.count(F.lit(1)).alias("f")))
     variants = vocab.select(
         "w",
         F.explode(

@@ -29,6 +29,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from waterbear_spark import scope
 from waterbear_spark.queries.graph import _EDGES_CTE, _und_edges
 from waterbear_spark.queries.tables import epoch_us, table
 
@@ -156,7 +157,7 @@ def clustering_coefficient(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: degree census is |nodes| rows; the wedge-close join runs on
     the bounded edge list exactly as in triangle counting.
     """
-    und = _und_edges(spark, sf_dir).persist()
+    und = scope.persist(_und_edges(spark, sf_dir))
     deg = und.groupBy("src").agg(F.count(F.lit(1)).alias("deg"))
     wedges2 = deg.agg(
         F.count(F.lit(1)).alias("n_nodes"),

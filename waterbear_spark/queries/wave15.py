@@ -24,6 +24,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from waterbear_spark import scope
 from waterbear_spark.queries.llm import (
     N_BANDS,
     N_HASHES,
@@ -73,13 +74,12 @@ def dedup_cross_modal(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _fan_out(
         spark, table(spark, sf_dir, "documents").select("doc_id", "text")
     ).select("doc_id", _tokens(F.col("text")).alias("toks"))
-    sets = (
+    sets = scope.persist(
         docs.filter(F.size("toks") >= 3)
         .select(
             "doc_id", F.array_distinct(_shingles(F.col("toks"))).alias("arr")
         )
         .withColumn("n", F.size("arr"))
-        .persist()
     )
 
     sig = sets.select("doc_id", _minhash_struct("arr").alias("mh")).select(

@@ -62,6 +62,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from waterbear_spark import scope
 from waterbear_spark.queries.llm import (
     _N_BANDS,
     N_PLANES,
@@ -84,8 +85,8 @@ def ann_recall_report(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # each assignment relation feeds probes AND candidates (self-join),
     # so materialize the one-scan result instead of re-scoring per use
-    ivf = _ivf_cells(spark, sf_dir).persist()
-    lsh = _hyperplane_bucketed(spark, sf_dir).select("vec_id", "bucket").persist()
+    ivf = scope.persist(_ivf_cells(spark, sf_dir))
+    lsh = scope.persist(_hyperplane_bucketed(spark, sf_dir).select("vec_id", "bucket"))
 
     def method_stats(assign: DataFrame, key: str, method: str) -> DataFrame:
         probes = assign.filter(F.col("vec_id") < _K).select(

@@ -56,6 +56,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from waterbear_spark import scope
 from waterbear_spark.queries.llm import TOKENS_SQL, _tokens
 from waterbear_spark.queries.tables import table
 from waterbear_spark.queries.textops import _BPE_ISH
@@ -279,10 +280,9 @@ def dsir_importance_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # both consumers (256-row bucket relation, per-doc scores) re-read
     # this compact relation — persist so tokenize+fold runs once
-    dh = (
+    dh = scope.persist(
         docs.select("doc_id", "source", F.explode(hc).alias("e"))
         .select("doc_id", "source", F.col("e.h").alias("h"), F.col("e.cnt").alias("cnt"))
-        .persist()
     )
     is_target = F.col("source") == _DSIR_TARGET
     # 256-row bucket relation with target/raw counts and the quantized

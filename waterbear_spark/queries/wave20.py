@@ -54,6 +54,7 @@ from functools import reduce
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from waterbear_spark import scope
 from waterbear_spark.queries.llm import _embedding_dim, _fold_dot
 from waterbear_spark.queries.tables import DEC, table
 
@@ -129,11 +130,7 @@ def _kmeans(
         for cid in cids:
             c = centroids[cid]
             cc = reduce(lambda a, x: a + x * x, c, 0.0)
-            dot = F.aggregate(
-                F.zip_with("v", F.array(*[F.lit(x) for x in c]), lambda a, b: a * b),
-                F.lit(0.0),
-                lambda acc, x: acc + x,
-            )
+            dot = _fold_dot("v", F.array(*[F.lit(x) for x in c]))
             scores.append(F.lit(cc) - 2 * dot)
         arr = F.array(*scores)
         idx = F.array_position(arr, F.array_min(arr)).cast("int")  # 1-based
@@ -322,32 +319,23 @@ def ann_ivf_probe_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     IVF index — see module docstring."""
     from waterbear_spark.queries.llm import embedding_topk
 
-    emb = (
+    emb = scope.persist(
         table(spark, sf_dir, "embeddings")
         .select(
             "vec_id", F.transform("embedding", lambda x: x.cast("double")).alias("v")
         )
-        .persist()
     )
     from waterbear_spark.queries.llm import _ivf_index
 
     # the SHIPPED assignment + fine centroids — the sweep audits the
     # exact index the other IVF queries build, never a re-derivation
     ivf_cells, cent, _params = _ivf_index(spark, sf_dir)
-    cells = ivf_cells.persist()
+    cells = scope.persist(ivf_cells)
     probes = emb.filter(F.col("vec_id") < _SWEEP_K).select(
         F.col("vec_id").alias("query_id"), F.col("v").alias("qv")
     )
     # (probe x cell) ranking grid: 5 x K rows, both sides tiny
-    score = (
-        F.aggregate(
-            F.zip_with("c", "c", lambda a, b: a * b), F.lit(0.0), lambda s, x: s + x
-        )
-        - 2
-        * F.aggregate(
-            F.zip_with("qv", "c", lambda a, b: a * b), F.lit(0.0), lambda s, x: s + x
-        )
-    )
+    score = _fold_dot("c", "c") - 2 * _fold_dot("qv", "c")
     from pyspark.sql import Window
 
     w = Window.partitionBy("query_id").orderBy("score", "cluster")
@@ -513,10 +501,7 @@ def ann_ivfpq_adc_search(spark: SparkSession, sf_dir: str) -> DataFrame:
 ann_ivfpq_adc_search.__doc__ = ann_ivfpq_adc_search.__doc__.format(np=_ADC_NPROBE, m=_PQ_M, k=_PQ_K, t=_ADC_TOPK)
 
 
-_PQ_MEMO: dict = {}
-_ADC_MEMO: dict = {}
-
-
+@scope.memoised
 def _pq_codes(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]:
     """The shared PQ code table + codebooks behind the ADC query path:
     ``(codes, codebooks)`` where codes = (m, vec_id, code) is every
@@ -532,10 +517,6 @@ def _pq_codes(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]:
     """
     from waterbear_spark.sources import ann_index as _store
 
-    memo_key = (spark.sparkContext.applicationId, str(sf_dir))
-    hit = _PQ_MEMO.get(memo_key)
-    if hit is not None:
-        return hit
     dim = _embedding_dim(spark, sf_dir)
     width = dim // _PQ_M
     fp = _store.corpus_fingerprint(spark, sf_dir)
@@ -550,13 +531,9 @@ def _pq_codes(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]:
     }
     staged = None if fp["n"] == 0 else _store.staged_read(spark, stage_dir, stage_meta)
     if staged is not None:
-        codes = staged["codes"].persist()
-        cb = staged["codebooks"].persist()
-        codes.count()
-        cb.count()
-        out = (codes, cb)
-        _PQ_MEMO[memo_key] = out
-        return out
+        codes = scope.persist(staged["codes"], eager=True)
+        cb = scope.persist(staged["codebooks"], eager=True)
+        return codes, cb
     emb = table(spark, sf_dir, "embeddings").select(
         "vec_id", F.transform("embedding", lambda x: x.cast("double")).alias("v")
     )
@@ -584,9 +561,10 @@ def _pq_codes(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]:
         )
         codes_parts.append(assigned.select(F.lit(m).alias("m"), "vec_id", "code"))
         cb_rows.extend((m, cid, codebook[cid]) for cid in sorted(codebook))
-    codes = reduce(lambda a, b: a.unionByName(b), codes_parts).persist()
+    codes = scope.persist(
+        reduce(lambda a, b: a.unionByName(b), codes_parts), eager=True
+    )
     cb = spark.createDataFrame(cb_rows, "m int, code int, c array<double>")
-    codes.count()
     if fp["n"] > 0:
         _store.staged_write(
             spark, stage_dir, {"codes": codes, "codebooks": cb}, stage_meta
@@ -598,16 +576,13 @@ def _pq_codes(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]:
         # on a concurrent-restage race — the build frames serve then.
         served = _store.staged_read(spark, stage_dir, stage_meta)
         if served is not None:
-            codes.unpersist()
-            codes = served["codes"].persist()
-            cb = served["codebooks"].persist()
-            codes.count()
-            cb.count()
-    out = (codes, cb)
-    _PQ_MEMO[memo_key] = out
-    return out
+            scope.release(codes)
+            codes = scope.persist(served["codes"], eager=True)
+            cb = scope.persist(served["codebooks"], eager=True)
+    return codes, cb
 
 
+@scope.memoised
 def _adc_scored(
     spark: SparkSession, sf_dir: str
 ) -> tuple[DataFrame, DataFrame, DataFrame]:
@@ -627,11 +602,6 @@ def _adc_scored(
 
     from waterbear_spark.queries.llm import _ivf_index
 
-    memo_key = (spark.sparkContext.applicationId, str(sf_dir))
-    hit = _ADC_MEMO.get(memo_key)
-    if hit is not None:
-        return hit
-
     dim = _embedding_dim(spark, sf_dir)
     width = dim // _PQ_M
     emb = table(spark, sf_dir, "embeddings").select(
@@ -642,13 +612,8 @@ def _adc_scored(
         F.col("vec_id").alias("query_id"), F.col("v").alias("qv")
     )
 
-    def dot(a, b):
-        return F.aggregate(
-            F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0), lambda s, x: s + x
-        )
-
     # coarse: rank the shipped fine centroids per probe, visit nprobe
-    coarse_score = dot("c", "c") - 2 * dot("qv", "c")
+    coarse_score = _fold_dot("c", "c") - 2 * _fold_dot("qv", "c")
     w_rk = Window.partitionBy("query_id").orderBy("score", "cluster")
     probe_cells = (
         probes.crossJoin(F.broadcast(cent))
@@ -662,13 +627,7 @@ def _adc_scored(
     codes, cb = _pq_codes(spark, sf_dir)
     # per-probe ADC lookup table: ||q_m - c||^2 in micro-units
     qm = F.slice("qv", 1 + F.col("m") * width, width)
-    qc = F.aggregate(
-        F.zip_with(qm, F.col("c"), lambda x, y: x * y), F.lit(0.0), lambda s, x: s + x
-    )
-    qq = F.aggregate(
-        F.zip_with(qm, qm, lambda x, y: x * y), F.lit(0.0), lambda s, x: s + x
-    )
-    part = dot("c", "c") - 2 * qc + qq
+    part = _fold_dot("c", "c") - 2 * _fold_dot(qm, "c") + _fold_dot(qm, qm)
     lut = probes.crossJoin(F.broadcast(cb)).select(
         "query_id",
         "m",
@@ -680,17 +639,14 @@ def _adc_scored(
         .filter(F.col("vec_id") != F.col("query_id"))
         .select("query_id", "vec_id")
     )
-    scored = (
+    scored = scope.persist(
         cand.join(codes, "vec_id")
         .join(F.broadcast(lut), ["query_id", "m", "code"])
         .groupBy("query_id", "vec_id")
-        .agg(F.sum("part_fp").alias("s_fp"))
-        .persist()
+        .agg(F.sum("part_fp").alias("s_fp")),
+        eager=True,
     )
-    scored.count()
-    out = (scored, probes, emb)
-    _ADC_MEMO[memo_key] = out
-    return out
+    return scored, probes, emb
 
 
 def _adc_chain() -> str:

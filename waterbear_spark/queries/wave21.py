@@ -46,6 +46,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from waterbear_spark import scope
 from waterbear_spark.queries.llm import TOKENS_SQL, _tokens
 from waterbear_spark.queries.tables import table
 
@@ -60,10 +61,9 @@ _HN_TOPK = 3
 def hard_negative_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-3 positives and top-3 hard negatives per probe — see module
     docstring."""
-    from waterbear_spark.queries.llm import _dot_expr, _embedding_dim
+    from waterbear_spark.queries.llm import _fold_dot
 
-    dim = _embedding_dim(spark, sf_dir)
-    emb = (
+    emb = scope.persist(
         table(spark, sf_dir, "embeddings")
         .select(
             "vec_id",
@@ -80,7 +80,6 @@ def hard_negative_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
                 )
             ),
         )
-        .persist()
     )
     probes = emb.filter(F.col("vec_id") < _HN_PROBES).select(
         F.col("vec_id").alias("query_id"),
@@ -98,7 +97,7 @@ def hard_negative_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
             .otherwise(F.lit("hard_negative"))
             .alias("role"),
             F.round(
-                _dot_expr("qv", "v", dim) / (F.col("qn") * F.col("nrm")), 4
+                _fold_dot("qv", "v") / (F.col("qn") * F.col("nrm")), 4
             ).alias("cos"),
         )
     )

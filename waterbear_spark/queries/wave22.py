@@ -47,7 +47,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from waterbear_spark.queries.llm import TOKENS_SQL, _tokens
+from waterbear_spark import scope
+from waterbear_spark.queries.llm import TOKENS_SQL, _fold_dot, _tokens
 from waterbear_spark.queries.tables import table
 
 _PREFIX_LEN = 5  # boilerplate prefix width (tokens)
@@ -217,15 +218,13 @@ def embedding_norm_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = table(spark, sf_dir, "embeddings").select(
         "vec_id", F.transform("embedding", lambda x: x.cast("double")).alias("v")
     )
-    nrm2 = F.aggregate(
-        F.zip_with("v", "v", lambda a, b: a * b), F.lit(0.0), lambda s, x: s + x
-    )
+    nrm2 = _fold_dot("v", "v")
     fp = F.floor(nrm2 * _NRM_SCALE + F.lit(0.5)).cast("bigint")
     # vecs feeds both the per-source stats and the flag join-back:
     # persist so the scan + join + norm folds run once, not twice
-    vecs = emb.join(
+    vecs = scope.persist(emb.join(
         docs, emb["vec_id"] == docs["doc_id"]
-    ).select("source", fp.alias("nrm2_fp")).persist()
+    ).select("source", fp.alias("nrm2_fp")))
     stats = vecs.groupBy("source").agg(
         F.count(F.lit(1)).alias("n_vecs"),
         F.min("nrm2_fp").alias("min_nrm2_fp"),

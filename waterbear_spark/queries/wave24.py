@@ -37,6 +37,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from waterbear_spark import scope
 from waterbear_spark.queries.llm import SHINGLES_SQL, TOKENS_SQL, _shingles, _tokens
 from waterbear_spark.queries.tables import table
 
@@ -52,11 +53,10 @@ def contamination_ngram_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     # r12: persist the tokenized frame ONCE — the three width passes each
     # materialize their shingle-set persist from these cached tokens
     # instead of re-scanning + re-tokenizing the corpus per width
-    # (scans 3 -> 1; guide §2.4 — same never-unpersisted-by-a-lazy-builder
-    # caveat as the per-width persists below)
-    docs = table(spark, sf_dir, "documents").select(
+    # (scans 3 -> 1; guide §2.4)
+    docs = scope.persist(table(spark, sf_dir, "documents").select(
         "doc_id", _tokens(F.col("text")).alias("toks")
-    ).persist()
+    ))
     parts = []
     for n in _SWEEP_NS:
         # persist: the materialization barrier the shingle explode needs —
@@ -65,14 +65,9 @@ def contamination_ngram_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
         # sweep benched 50 s -> ~3 s at sf0.1 once re-persisted). What is
         # cached is the (doc_id, arr) SHINGLE-SET frame, not the explosion;
         # at 100 TB it spills to disk-backed storage like any hot relation.
-        # The r7->r8 interim dropped these persists to fix the never-
-        # unpersisted leak the round-7 advice flagged; the quadratic
-        # re-evaluation is the worse trade, so the persists return (a lazy
-        # builder has no post-materialization unpersist hook — long-lived
-        # sessions reclaim via clearCache, which bench.py issues per pass).
-        shingled = docs.filter(F.size("toks") >= n).select(
+        shingled = scope.persist(docs.filter(F.size("toks") >= n).select(
             "doc_id", F.array_distinct(_shingles(F.col("toks"), n)).alias("arr")
-        ).persist()
+        ))
         bench = (
             shingled.filter(F.col("doc_id") < _BENCH_DOCS)
             .select(F.explode("arr").alias("s"))

@@ -45,7 +45,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from waterbear_spark.queries.llm import TOKENS_SQL, _shingles, _tokens
+from waterbear_spark import scope
+from waterbear_spark.queries.llm import TOKENS_SQL, _fold_dot, _shingles, _tokens
 from waterbear_spark.queries.tables import table
 from waterbear_spark.queries.wave20 import (
     _ADC_FP,
@@ -63,13 +64,6 @@ _BLOOM_BITS = 4096  # filter size m (fixed — the broadcast-state bound)
 _BLOOM_K = 3  # hash functions per shingle
 
 
-def _dot(a, b) -> Column:
-    """Sequential left fold — the IEEE order of DuckDB list_dot_product."""
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0), lambda s, x: s + x
-    )
-
-
 def ann_refine_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Two-stage IVF-PQ search: ADC shortlist (R={r}) -> exact re-rank
     (top {t}) — see module docstring. Output: (query_id, rank, vec_id,
@@ -82,7 +76,7 @@ def ann_refine_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("query_id", "vec_id", "adc_rank")
     )
     # stage 2: raw vectors for the shortlist rows ONLY (per-probe R rows)
-    d = (_dot("v", "v") - 2 * _dot("qv", "v")) + _dot("qv", "qv")
+    d = (_fold_dot("v", "v") - 2 * _fold_dot("qv", "v")) + _fold_dot("qv", "qv")
     exact = (
         short.join(emb, "vec_id")
         .join(F.broadcast(probes), "query_id")
@@ -160,7 +154,7 @@ def matryoshka_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
         arr, prev = [], 0
         for dim in _MAT_DIMS:
             sl = F.slice(col, prev + 1, dim - prev)
-            arr.append(_dot(sl, sl))
+            arr.append(_fold_dot(sl, sl))
             prev = dim
         return F.array(*arr)
 
@@ -184,7 +178,7 @@ def matryoshka_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
         vb = F.slice("v", prev + 1, width)
         qb = F.slice("qv", prev + 1, width)
         part = (
-            F.element_at("nb", i + 1) - 2 * _dot(qb, vb)
+            F.element_at("nb", i + 1) - 2 * _fold_dot(qb, vb)
         ) + F.element_at("qnb", i + 1)
         blocks.append(F.floor(part * _ADC_FP + F.lit(0.5)).cast("long"))
         prev = dim
@@ -315,9 +309,9 @@ def bloom_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     # decontaminate_overlap); three subtrees consume the shingle sets
     # (bench filter, train explode, final flag join) — benched ~15x
     # faster persisted at sf0.1
-    sh = docs.select(
+    sh = scope.persist(docs.select(
         "doc_id", "source", F.array_distinct(_shingles(F.col("toks"))).alias("arr")
-    ).persist()
+    ))
     bench = (
         sh.filter(F.col("doc_id") < 10)
         .select(F.explode("arr").alias("s"))

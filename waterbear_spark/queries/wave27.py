@@ -49,6 +49,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from waterbear_spark import scope
 from waterbear_spark.queries.llm import (
     SHINGLES_SQL,
     TOKENS_SQL,
@@ -76,11 +77,11 @@ def novelty_profile_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     # needs (decontaminate_overlap's measured finding): without it the
     # array_distinct(shingles) expression re-evaluates under Generate and
     # the per-doc cost goes quadratic — benched 26 s -> 1.75 s at sf0.1
-    sh = docs.select(
+    sh = scope.persist(docs.select(
         "doc_id",
         "source",
         F.array_distinct(_shingles(F.col("toks"))).alias("arr"),
-    ).persist()
+    ))
     ex = sh.select(
         "doc_id", "source", F.size("arr").alias("n_sh"), F.explode("arr").alias("s")
     )

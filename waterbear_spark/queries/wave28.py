@@ -32,6 +32,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from waterbear_spark import scope
 from waterbear_spark.queries.llm import (
     N_BANDS,
     N_HASHES,
@@ -62,7 +63,7 @@ def _candidate_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id", F.array_distinct(_shingles(F.col("toks"))).alias("arr")
     )
 
-    sig = (
+    sig = scope.persist(
         sets.select(
             "doc_id",
             "arr",
@@ -70,7 +71,6 @@ def _candidate_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
             _minhash_struct("arr").alias("mh"),
         )
         .select("doc_id", "arr", "n", "mh.*")
-        .persist()
     )
     band_entries = F.array(
         *[

@@ -32,6 +32,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from waterbear_spark.queries.llm import _fold_dot
 from waterbear_spark.queries.tables import table
 from waterbear_spark.queries.wave20 import (
     _ADC_FP,
@@ -40,7 +41,7 @@ from waterbear_spark.queries.wave20 import (
     _adc_chain,
     _adc_scored,
 )
-from waterbear_spark.queries.wave26 import _REFINE_R, _dot
+from waterbear_spark.queries.wave26 import _REFINE_R
 
 _ANISO_FP = 1_000_000  # cosine micro-units (exact integer averaging)
 
@@ -51,7 +52,7 @@ def ann_refine_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     refine_hits, refine_recall), one row per probe."""
     scored, probes, emb = _adc_scored(spark, sf_dir)
     # brute-force L2 truth over the full corpus (probe-bounded pass)
-    d = (_dot("v", "v") - 2 * _dot("qv", "v")) + _dot("qv", "qv")
+    d = (_fold_dot("v", "v") - 2 * _fold_dot("qv", "v")) + _fold_dot("qv", "qv")
     w_t = Window.partitionBy("query_id").orderBy("d_fp", "vec_id")
     truth = (
         emb.crossJoin(F.broadcast(probes))
@@ -199,8 +200,8 @@ def embedding_anisotropy_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     b = ranked.select(
         "label", (F.col("rk") - 1).alias("rk"), F.col("v").alias("vb")
     )
-    cos = _dot("va", "vb") / (
-        F.sqrt(_dot("va", "va")) * F.sqrt(_dot("vb", "vb"))
+    cos = _fold_dot("va", "vb") / (
+        F.sqrt(_fold_dot("va", "va")) * F.sqrt(_fold_dot("vb", "vb"))
     )
     pairs = a.join(b, ["label", "rk"]).select(
         "label",

@@ -37,6 +37,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from waterbear_spark import scope
 from waterbear_spark.queries.tables import table
 
 _KM_SEATS = 1000
@@ -699,7 +700,7 @@ def count_min_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact = orders.groupBy("o_custkey").agg(
         F.count(F.lit(1)).alias("exact_count")
     )
-    keyed = exact.select(
+    keyed = scope.persist(exact.select(
         "o_custkey",
         "exact_count",
         F.explode(
@@ -714,10 +715,7 @@ def count_min_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select(
         "o_custkey", "exact_count",
         F.col("h.r").alias("r"), F.col("h.b").alias("b"),
-    ).persist()
-    # no matching unpersist: the returned plan reads this lazily, so the
-    # entry lives until session end / LRU eviction (bench runs one
-    # session per catalog pass; repeated in-session invocations re-cache)
+    ))
     sketch = keyed.groupBy("r", "b").agg(
         F.sum("exact_count").alias("cnt")
     )

@@ -54,6 +54,7 @@ from functools import reduce
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from waterbear_spark import scope
 from waterbear_spark.operators.ntile import bucketed_ntile
 from waterbear_spark.queries.llm import (
     N_BANDS,
@@ -225,7 +226,7 @@ def curriculum_schedule(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Stopword membership is ``isin`` — an O(1) InSet probe per token —
     # not array_contains over the 33-literal array (O(|stop|) per
     # token); same count, bit-identical quality.
-    docs = (
+    docs = scope.persist(
         _fan_out(spark, table(spark, sf_dir, "documents").select("doc_id", "text"))
         .select("doc_id", _tokens(F.col("text")).alias("toks"))
         .filter(F.size("toks") > 0)
@@ -238,7 +239,6 @@ def curriculum_schedule(spark: SparkSession, sf_dir: str) -> DataFrame:
                 6,
             ).alias("quality"),
         )
-        .persist()
     )
     phased = bucketed_ntile(
         docs.withColumn("negq", -F.col("quality")),

@@ -30,6 +30,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from waterbear_spark import scope
 from waterbear_spark.queries.tables import DEC, table
 
 
@@ -281,10 +282,10 @@ def rake_keywords(spark: SparkSession, sf_dir: str) -> DataFrame:
     # stream crosses exactly one (combinable) shuffle, and everything
     # downstream — word stats, word explode, score join-back — runs on
     # the distinct-phrase relation weighted by n_occurrences
-    dist = phrases.groupBy("phrase").agg(
+    dist = scope.persist(phrases.groupBy("phrase").agg(
         F.count(F.lit(1)).alias("n_occurrences"),
         F.max(F.size("words")).alias("n_words"),
-    ).persist()
+    ))
     dw = dist.select(
         "phrase",
         "n_occurrences",
@@ -477,7 +478,7 @@ def kmv_set_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("event_type", h.alias("h"))
         .distinct()
     )
-    pts = pts.persist()
+    pts = scope.persist(pts)
 
     # two-phase k-minimum selection: a local prune per (type, h%64)
     # bucket bounds every window partition to 1/64 of the hashes, then

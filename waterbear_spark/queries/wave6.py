@@ -29,6 +29,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from waterbear_spark import scope
 from waterbear_spark.queries.tables import DEC, table
 
 # ---------------------------------------------------------------------------
@@ -448,12 +449,11 @@ def containment_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     # so the exact-intersection phase is a row-local array_intersect
     # instead of two corpus-sized (shingle, doc) shuffles (r11; guide
     # §2.3 "shuffle keys, not payloads", §2.4)
-    docs_arr = (
+    docs_arr = scope.persist(
         docs.filter(F.size("toks") >= 3)
         .select(
             "doc_id", F.array_distinct(_shingles(F.col("toks"))).alias("sharr")
         )
-        .persist()
     )
     sh = docs_arr.select("doc_id", F.explode("sharr").alias("sh"))
     rare = (

@@ -34,6 +34,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from waterbear_spark import scope
 from waterbear_spark.queries.tables import DEC, table
 
 
@@ -474,9 +475,9 @@ def retrieval_eval_ndcg(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = table(spark, sf_dir, "documents").select("doc_id", "text")
     score, rel = _eval_scores(_tokens(F.col("text")))
-    scored = docs.select(
+    scored = scope.persist(docs.select(
         "doc_id", score.alias("score"), rel.alias("rel")
-    ).persist()
+    ))
     ranked = (
         scored.orderBy(F.col("score").desc(), "doc_id")
         .limit(_EVAL_K)

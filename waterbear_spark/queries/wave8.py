@@ -31,6 +31,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from waterbear_spark import scope
 from waterbear_spark.queries.tables import DEC, epoch_us, table
 
 
@@ -78,7 +79,7 @@ def grid_dbscan(spark: SparkSession, sf_dir: str) -> DataFrame:
             "cx", "cy", "n_pts", (F.col("cx") * _DB_SPAN + F.col("cy")).alias("cid")
         )
     )
-    cells = cells.persist()
+    cells = scope.persist(cells)
     nbr = (
         cells.select(
             "cid",
@@ -261,12 +262,11 @@ def frequent_triples(spark: SparkSession, sf_dir: str) -> DataFrame:
     sum-of-C(basket,3) over baskets — linear-ish in orders, never
     |parts|^3. Support = triple orders / total orders. Top {k} by count.
     """
-    baskets = (
+    baskets = scope.persist(
         table(spark, sf_dir, "lineitem")
         .select("l_orderkey", "l_partkey")
         .groupBy("l_orderkey")
         .agg(F.array_sort(F.collect_set("l_partkey")).alias("items"))
-        .persist()
     )
     tot = baskets.agg(F.count(F.lit(1)).alias("tot_orders"))
     triple_arr = F.expr(

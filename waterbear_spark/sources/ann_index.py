@@ -39,7 +39,7 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-_FP_MEMO: dict = {}
+from waterbear_spark import scope
 
 _REPO = os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -57,6 +57,7 @@ def component_dir(sf_dir: str, component: str) -> str:
     return os.path.join(store_root(), slug, component)
 
 
+@scope.memoised
 def corpus_fingerprint(spark: SparkSession, sf_dir: str) -> dict:
     """(n, min/max/sum of vec_id, content hash) of the embeddings table
     — one column-pruned aggregate, memoised per (application, corpus).
@@ -71,10 +72,6 @@ def corpus_fingerprint(spark: SparkSession, sf_dir: str) -> dict:
     prefix (sparse ids) without an extra job."""
     from waterbear_spark.queries.tables import table
 
-    key = (spark.sparkContext.applicationId, str(sf_dir))
-    hit = _FP_MEMO.get(key)
-    if hit is not None:
-        return hit
     row = (
         table(spark, sf_dir, "embeddings")
         .agg(
@@ -86,15 +83,13 @@ def corpus_fingerprint(spark: SparkSession, sf_dir: str) -> dict:
         )
         .collect()[0]
     )
-    fp = {
+    return {
         "n": int(row["n"]),
         "min_vec_id": None if row["mn"] is None else int(row["mn"]),
         "max_vec_id": None if row["mx"] is None else int(row["mx"]),
         "sum_vec_id": None if row["sm"] is None else int(row["sm"]),
         "content_hash": None if row["ch"] is None else int(row["ch"]),
     }
-    _FP_MEMO[key] = fp
-    return fp
 
 
 def staged_read(
