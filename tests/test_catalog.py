@@ -151,25 +151,19 @@ def test_q5_broadcasts_dimensions(spark):
 
 def test_priority_window_integrity():
     """The driver validates the first 50 catalog entries in dict order;
-    the rotation machinery must keep that window well-formed: every
-    priority name exists, no duplicates anywhere, priority entries lead,
-    and the remainder is ordered least-recently-driver-verified first
-    (genuine round-robin — nothing parks permanently outside the window)."""
+    the rotation machinery must keep that window well-formed: no
+    duplicates anywhere, and the catalog ordered least-recently-driver-
+    verified first (genuine round-robin — nothing parks permanently
+    outside the window)."""
     from waterbear_spark.queries import catalog
 
     names = list(catalog.QUERIES)
     assert len(names) == len(set(names))
-    for k in catalog._PRIORITY:
-        assert k in catalog.QUERIES, f"priority entry {k} missing"
-    # priority entries lead the window verbatim
-    head = [k for k in catalog._PRIORITY if k in catalog.QUERIES]
-    assert names[: len(head)] == head
 
-    # the rest must be sorted by (last verified round, name): stalest
-    # evidence rotates to the front, never-verified (round 0) before all
+    # sorted by (last verified round, name): stalest evidence rotates to
+    # the front, never-verified (round 0) before all
     last = catalog._last_verified_round()
-    rest = names[len(head):]
-    assert rest == sorted(rest, key=lambda k: (last.get(k, 0), k))
+    assert names == sorted(names, key=lambda k: (last.get(k, 0), k))
 
     window = names[:50]
     rows_only = [k for k in window if k not in catalog.ORACLE_SQL]

@@ -1,8 +1,7 @@
 """Environment-gate probes (verdict r4 ask #8).
 
-Three capabilities are honestly gated on packages this container lacks:
-Delta Lake (delta-spark), real media codecs (PIL/libav), and the
-transformWithStateInPandas state-server protocol (protobuf). These tests
+Two capabilities are honestly gated on packages this container lacks:
+Delta Lake (delta-spark) and real media codecs (PIL/libav). These tests
 pin the CURRENT state of each gate: while the package is absent they
 assert the gate raises/falls back cleanly; the moment a future
 environment gains the package, the corresponding branch here FAILS
@@ -46,16 +45,3 @@ def test_codec_gate_raises_not_implemented(spark):
     with pytest.raises(NotImplementedError, match="codec"):
         multimodal.decode_media(df)
 
-
-def test_tws_gate_state_matches_import_reality():
-    from waterbear_spark.streaming import stateful
-
-    # pyspark 4.x always ships the API surface...
-    assert stateful.HAS_TWS, "pyspark lost transformWithStateInPandas?"
-    # ...but the runtime protocol needs protobuf, absent here; the suite
-    # skips TWS execution tests on this flag
-    if _has("google.protobuf"):
-        pytest.fail(
-            "protobuf appeared in the environment: unskip the TWS "
-            "execution tests (tests/test_stateful.py) and delete this guard"
-        )

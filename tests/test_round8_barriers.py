@@ -1,20 +1,16 @@
-"""Structural guards from the round-8 postmortems.
+"""Structural guard from the round-8 postmortems.
 
-1. The Generate materialization barrier: the three shingle-exploding
-   queries that regressed to quadratic per-doc cost when their persists
-   were dropped (bloom 21 s, novelty 21 s, contamination 50 s at sf0.1;
-   2.1/1.5/1.8 s with the barrier) must keep a cached relation in their
-   physical plans — the plan-level witness that the explode reads a
-   materialized shingle-set frame instead of re-evaluating it.
-2. Rotation hygiene: every _PRIORITY name must exist in the
-   catalog — a typo'd name silently drops a query out of the intended
-   driver-evidence slot.
+The Generate materialization barrier: the three shingle-exploding
+queries that regressed to quadratic per-doc cost when their persists
+were dropped (bloom 21 s, novelty 21 s, contamination 50 s at sf0.1;
+2.1/1.5/1.8 s with the barrier) must keep a cached relation in their
+physical plans — the plan-level witness that the explode reads a
+materialized shingle-set frame instead of re-evaluating it.
 """
 
 import pytest
 
 from tests.conftest import SF_SMOKE
-from waterbear_spark.queries.catalog import QUERIES, _PRIORITY
 from waterbear_spark.queries.wave24 import contamination_ngram_sweep
 from waterbear_spark.queries.wave26 import bloom_decontaminate
 from waterbear_spark.queries.wave27 import novelty_profile_by_source
@@ -40,7 +36,3 @@ def test_shingle_explode_reads_cached_frame(spark, fn):
         "explode re-evaluates the array expression per output row "
         "(quadratic per doc; see SCALE.md round-8 results)"
     )
-
-
-def test_rotation_names_exist():
-    assert set(_PRIORITY) <= set(QUERIES)

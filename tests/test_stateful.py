@@ -56,61 +56,3 @@ def test_running_totals_accumulate_across_batches(spark, tmp_path):
     # state really spanned multiple micro-batches
     assert query.lastProgress is not None
 
-
-def test_transform_with_state_matches_batch(spark, tmp_path):
-    """transformWithStateInPandas (RocksDB state store) running totals:
-    final emission per key equals the batch aggregate."""
-    import pytest
-
-    # the TWS state-server protocol needs the protobuf python package
-    pytest.importorskip("google.protobuf.descriptor")
-    from waterbear_spark.streaming.stateful import running_user_totals_tws
-
-    events = table(spark, SF_SMOKE, "events").limit(300)
-    src = str(tmp_path / "ev_tws")
-    events.repartition(3).write.mode("overwrite").option(
-        "timestampFormat", "yyyy-MM-dd'T'HH:mm:ss.SSSSSS"
-    ).json(src)
-
-    prev = spark.conf.get("spark.sql.streaming.stateStore.providerClass", None)
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    )
-    try:
-        stream = (
-            spark.readStream.schema(events.schema)
-            .option("maxFilesPerTrigger", 1)
-            .option("timestampFormat", "yyyy-MM-dd'T'HH:mm:ss.SSSSSS")
-            .json(src)
-        )
-        query = (
-            running_user_totals_tws(stream)
-            .writeStream.format("memory")
-            .queryName("running_tws")
-            .outputMode("update")
-            .trigger(availableNow=True)
-            .start()
-        )
-        query.awaitTermination(180)
-        emitted = spark.sql("SELECT * FROM running_tws")
-        batch_truth = {
-            r["user_id"]: (r["n"], round(r["s"], 2))
-            for r in events.groupBy("user_id")
-            .agg(F.count(F.lit(1)).alias("n"), F.sum("value").alias("s"))
-            .collect()
-        }
-        final = {}
-        for row in emitted.collect():
-            cur = final.get(row["user_id"])
-            if cur is None or row["n_events"] > cur[0]:
-                final[row["user_id"]] = (row["n_events"], row["total_value"])
-        for uid, (n, s) in batch_truth.items():
-            got_n, got_s = final[uid]
-            assert got_n == n, f"user {uid}: {got_n} != {n}"
-            assert abs(got_s - s) < 0.05
-    finally:
-        if prev is None:
-            spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-        else:
-            spark.conf.set("spark.sql.streaming.stateStore.providerClass", prev)

@@ -38,6 +38,12 @@ from waterbear_spark.queries.llm import (
 )
 from waterbear_spark.queries.tables import table
 
+_MIN_TOKENS = 10  # quality gate: shortest document kept
+_MAX_STOP_RATIO = 0.9  # quality gate: highest stopword share kept
+_CONTAMINATION_TAU = 0.5  # benchmark-overlap share that drops a doc
+_LM_SIGMA = 3.0  # LM floor = mean - _LM_SIGMA * stddev of doc scores
+_PACK_BUDGET = 512  # tokens per packed training sequence
+
 
 @dataclass
 class CorpusStats:
@@ -55,11 +61,6 @@ def training_corpus(
     spark: SparkSession,
     sf_dir: str,
     out_path: str | None = None,
-    min_tokens: int = 10,
-    max_stop_ratio: float = 0.9,
-    contamination_tau: float = 0.5,
-    lm_sigma: float = 3.0,
-    pack_budget: int = 512,
 ) -> tuple[DataFrame, CorpusStats]:
     """Run the pipeline; return the final corpus frame (doc_id, text,
     lang, split) and per-stage survivor counts. Writes ``split=``
@@ -73,7 +74,7 @@ def training_corpus(
         F.filter(toks, lambda t: t.isin(*_STOPWORDS))
     ) / F.size(toks)
     quality = raw.filter(
-        (F.size(toks) >= min_tokens) & (stop_ratio <= max_stop_ratio)
+        (F.size(toks) >= _MIN_TOKENS) & (stop_ratio <= _MAX_STOP_RATIO)
     )
     n_quality = quality.count()
 
@@ -94,7 +95,7 @@ def training_corpus(
     # 4. decontamination — drop docs with benchmark n-gram overlap
     contaminated = (
         decontaminate_overlap(spark, sf_dir)
-        .filter(F.col("contamination") >= contamination_tau)
+        .filter(F.col("contamination") >= _CONTAMINATION_TAU)
         .select("doc_id")
     )
     clean = near.join(contaminated, "doc_id", "left_anti")
@@ -103,7 +104,7 @@ def training_corpus(
     # 5. LM-score floor — unigram model fit on the surviving corpus
     #    itself (vocabulary aggregate + logprob join, integer micro-nat
     #    sums as in queries/corpusprep.py lm_quality_score); the floor is
-    #    relative (mean - lm_sigma * stddev of the per-doc score), so the
+    #    relative (mean - _LM_SIGMA * stddev of the per-doc score), so the
     #    gate adapts to any corpus instead of hardcoding a perplexity
     tok = clean.select("doc_id", F.explode(toks).alias("t"))
     vocab = tok.groupBy("t").agg(F.count(F.lit(1)).alias("cnt"))
@@ -126,7 +127,7 @@ def training_corpus(
         )
     )
     floor_row = doc_scores.agg(
-        (F.avg("avg_logp") - F.lit(lm_sigma) * F.stddev_pop("avg_logp")).alias(
+        (F.avg("avg_logp") - F.lit(_LM_SIGMA) * F.stddev_pop("avg_logp")).alias(
             "floor"
         )
     )
@@ -164,7 +165,7 @@ def training_corpus(
         for r in final.groupBy("split").agg(F.count(F.lit(1)).alias("n")).collect()
     }
 
-    # 7. packing manifest for the train split: how many pack_budget-token
+    # 7. packing manifest for the train split: how many _PACK_BUDGET-token
     #    context windows the corpus fills (concat-and-chunk layout, as in
     #    queries/corpusprep.py sequence_packing)
     train_tok = final.filter(F.col("split") == "train").select(
@@ -172,7 +173,7 @@ def training_corpus(
     )
     n_train_sequences = int(
         train_tok.agg(
-            F.ceil(F.sum("tok_n") / F.lit(float(pack_budget))).alias("n")
+            F.ceil(F.sum("tok_n") / F.lit(float(_PACK_BUDGET))).alias("n")
         ).collect()[0]["n"]
         or 0
     )

@@ -75,8 +75,10 @@ class Expectations:
 
     def split(self, df: DataFrame, col: str = "violations") -> tuple[DataFrame, DataFrame]:
         """(valid, quarantined) — quarantined rows keep the list of violated
-        rule names for triage. The flagged frame is computed once so Spark
-        can reuse the scan across both branches under AQE."""
+        rule names for triage. Both are lazy filters of one flagged plan,
+        not a cached frame: each action on a branch scans ``df`` and
+        evaluates the rules again, so writing both (as ``silver_refine``
+        does) scans the input twice."""
         flagged = self.with_violations(df, col)
         valid = flagged.filter(F.size(F.col(col)) == 0).drop(col)
         quarantined = flagged.filter(F.size(F.col(col)) > 0)

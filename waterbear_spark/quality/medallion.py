@@ -6,10 +6,11 @@ into silver with quarantine. Delta Lake is used when the ``delta`` package
 is importable (CHECK constraints + column comments); otherwise parquet,
 with the same layout and semantics.
 
-Scale notes: bronze is partitioned by ingest date so downstream
-incremental reads prune to new partitions; the silver write carries
-column comments from the entity metadata; expectation evaluation is one
-codegen pass (see quality.expectations).
+Scale notes: bronze is partitioned by ingest date, but ``silver_refine``
+reads all of bronze and rewrites silver on every run (no incremental
+pruning yet); the silver and quarantine writes each scan bronze and
+evaluate the expectations once, in one codegen pass per write (see
+quality.expectations).
 """
 
 from __future__ import annotations

@@ -123,58 +123,6 @@ ORACLE_SQL = {k: v for m in _MODULES for k, v in m.ORACLES.items()}
 # non-SQL-expressible ops, which get rows-only checks)
 assert set(ORACLE_SQL) <= set(QUERIES), "oracle without query"
 
-# The driver's correctness harness validates the catalog in dict order
-# with a bounded window (first 50), so ordering decides which operators
-# get cross-engine evidence each round. The rotation is a genuine
-# round-robin driven by the committed evidence itself: each query's
-# last-verified round is read from the CORRECTNESS_r*.json files at the
-# repo root, and the catalog orders by
-#
-#   1. _PRIORITY — this round's new or semantics-changed queries, whose
-#      prior evidence (if any) predates the change;
-#   2. everything else, least-recently-driver-verified first (never
-#      verified sorts as round 0), name as the deterministic tie-break.
-#
-# So every round the window covers: fixed/new queries, then the largest
-# never-verified slice, then the STALEST previously-verified queries —
-# no query parks permanently outside the window, and a regression in a
-# long-validated query resurfaces once its evidence becomes the oldest.
-# CORRECTNESS_LOCAL.json (``scripts/graft.py oracle``, full catalog)
-# remains the per-round local certification on top.
-_PRIORITY = [
-    # --- round 11 ---
-    # the one catalog row with no driver-green record anywhere (its
-    # same-commit 3-scale certs are in CORRECTNESS_LOCAL_R10/SF1E):
-    # its deferred rotation, the r10 verdict's #1 ask — after this the
-    # cumulative driver record is 314/314. The r11 persist of the band
-    # relation in the capped path (llm._band_candidates) is plan-only;
-    # values re-certified at three scales in the same commit
-    # (CORRECTNESS_LOCAL_R11).
-    "dedup_near_minhash_capped",
-    # plans changed this round, values certified unchanged at three
-    # scales (CORRECTNESS_LOCAL_R11_*): rake_keywords swapped its
-    # negated-char-class punctuation pass for the positive-class
-    # extract (2.6x at sf1); winnowing_fingerprints and
-    # dedup_cross_modal fan their CPU-dense scan stages to cluster
-    # width (AQE_PROBE_r11 A/B: 1.21x / 1.14x)
-    "rake_keywords",
-    "winnowing_fingerprints",
-    "dedup_cross_modal",
-    # same treatment, second wave: scan-width fan-out on the four
-    # heavy-tail rows whose A/B showed a 1.7-1.9x win at the bench
-    # scale (plus the manifest the rewrite shares); plan-only, values
-    # in the same 3-scale cert
-    "containment_join",
-    "profile_table",
-    "dup_span_rewrite",
-    "dup_span_removal_manifest",
-    "incremental_dedup_merge",
-    # the 9-slot head + approx_distinct's rows-only slot leave 40
-    # window slots for the stalest previously-verified rows — exactly
-    # the r4 floor (40 rows), so after this rotation the stale floor
-    # is >= r5, continuing the freshness ratchet.
-]
-
 
 def _last_verified_round() -> dict[str, int]:
     """name -> latest driver round whose CORRECTNESS_r*.json records a
@@ -207,13 +155,20 @@ def _last_verified_round() -> dict[str, int]:
 
 
 def _reorder(mapping: dict) -> dict:
+    """The driver's correctness harness validates the catalog in dict
+    order with a bounded window (first 50), so ordering decides which
+    operators get cross-engine evidence each round. The order is a
+    round-robin driven by the committed evidence itself: least-recently
+    driver-verified first (never verified sorts as round 0), name as the
+    deterministic tie-break. So the window covers the never-verified
+    slice, then the STALEST previously-verified queries; no query parks
+    permanently outside it, and a regression in a long-validated query
+    resurfaces once its evidence becomes the oldest.
+    CORRECTNESS_LOCAL.json (``scripts/graft.py oracle``, full catalog)
+    remains the per-round local certification on top."""
     last = _last_verified_round()
-    head = [k for k in _PRIORITY if k in mapping]
-    rest = sorted(
-        (k for k in mapping if k not in set(head)),
-        key=lambda k: (last.get(k, 0), k),
-    )
-    return {k: mapping[k] for k in head + rest}
+    order = sorted(mapping, key=lambda k: (last.get(k, 0), k))
+    return {k: mapping[k] for k in order}
 
 
 QUERIES = _reorder(QUERIES)

@@ -15,13 +15,14 @@ from pyspark.sql import functions as F
 
 from waterbear_spark import scope
 from waterbear_spark.queries.llm import (
-    N_BANDS,
-    N_HASHES,
     SHINGLES_SQL,
     TOKENS_SQL,
-    _fan_out,
-    _minhash_struct,
-    _shingles,
+    _SIG_SQL,
+    _bands_sql,
+    _doc_tokens,
+    _lsh_bands,
+    _shingle_sets,
+    _signatures,
     _tokens,
 )
 from waterbear_spark.queries.tables import davg, oracle_davg, table
@@ -453,42 +454,16 @@ def incremental_dedup_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     all equi-joins keyed on digest/band. At 100 TB the digest/band index
     is what you persist between ingests — the text is never rescanned.
     """
-    # digest + shingle + MinHash compute is CPU-dense; widen the scan
-    # to cluster width before it (AQE_PROBE_r11 family: 1.7x at the
-    # bench scale; no-op on production-width scans)
-    docs = _fan_out(
-        spark, table(spark, sf_dir, "documents").select("doc_id", "text")
-    ).select(
-        "doc_id",
-        F.md5("text").alias("digest"),
-        _tokens(F.col("text")).alias("toks"),
-    )
+    # digest + shingle + MinHash compute is CPU-dense; _doc_tokens widens
+    # the scan to cluster width before it (AQE_PROBE_r11 family: 1.7x at
+    # the bench scale; no-op on production-width scans)
+    docs = _doc_tokens(spark, sf_dir, F.md5("text").alias("digest"))
     is_inc = F.col("doc_id") % _INC_MOD == 0
     incoming = docs.filter(is_inc)
     base = docs.filter(~is_inc)
 
     def bands_of(frame: DataFrame) -> DataFrame:
-        sets = frame.filter(F.size("toks") >= 3).select(
-            "doc_id", F.array_distinct(_shingles(F.col("toks"))).alias("arr")
-        )
-
-        sig = sets.select(
-            "doc_id", _minhash_struct("arr").alias("mh")
-        ).select("doc_id", "mh.*")
-        entries = F.array(
-            *[
-                F.struct(
-                    F.lit(b).alias("band"),
-                    F.concat(
-                        F.col(f"h{2 * b}"), F.col(f"h{2 * b + 1}")
-                    ).alias("bkey"),
-                )
-                for b in range(N_BANDS)
-            ]
-        )
-        return sig.select("doc_id", F.explode(entries).alias("e")).select(
-            "doc_id", F.col("e.band").alias("band"), F.col("e.bkey").alias("bkey")
-        )
+        return _lsh_bands(_signatures(_shingle_sets(frame)))
 
     base_digests = base.select("digest").distinct()
     after_exact = incoming.join(base_digests, "digest", "left_anti")
@@ -534,21 +509,21 @@ after_exact AS (
 ),
 inc_sig AS (
     SELECT doc_id,
-           {', '.join(f"list_min(list_transform(arr, s -> md5('{i}|' || s))) AS h{i}" for i in range(N_HASHES))}
+           {_SIG_SQL}
     FROM (SELECT doc_id, list_distinct({SHINGLES_SQL}) AS arr
           FROM after_exact WHERE len(toks) >= 3)
 ),
 base_sig AS (
     SELECT doc_id,
-           {', '.join(f"list_min(list_transform(arr, s -> md5('{i}|' || s))) AS h{i}" for i in range(N_HASHES))}
+           {_SIG_SQL}
     FROM (SELECT doc_id, list_distinct({SHINGLES_SQL}) AS arr
           FROM base WHERE len(toks) >= 3)
 ),
 inc_bands AS (
-    {' UNION ALL '.join(f"SELECT doc_id, {b} AS band, h{2 * b} || h{2 * b + 1} AS bkey FROM inc_sig" for b in range(N_BANDS))}
+    {_bands_sql('inc_sig')}
 ),
 base_bands AS (
-    {' UNION ALL '.join(f"SELECT doc_id, {b} AS band, h{2 * b} || h{2 * b + 1} AS bkey FROM base_sig" for b in range(N_BANDS))}
+    {_bands_sql('base_sig')}
 ),
 near_hits AS (
     SELECT DISTINCT i.doc_id
@@ -819,16 +794,11 @@ def dup_span_census(spark: SparkSession, sf_dir: str) -> DataFrame:
     ~1 digest per corpus token, which is what exact substring dedup
     costs anywhere.
     """
-    # widen the scan BEFORE the per-window digesting: one md5 per corpus
-    # token otherwise runs inside the 1-split scan stage (measured 2.2 s
-    # of this query's 2.1-3.5 s at sf0.1 on one task); no-op on
-    # production-width scans
-    docs = _fan_out(
-        spark, table(spark, sf_dir, "documents").select("doc_id", "text")
-    )
-    arr = docs.select(
-        "doc_id", _tokens(F.col("text")).alias("t")
-    ).filter(F.size("t") >= _SPAN_K)
+    # _doc_tokens widens the scan before the per-window digesting: one
+    # md5 per corpus token otherwise runs inside the 1-split scan stage
+    # (measured 2.2 s of this query's 2.1-3.5 s at sf0.1 on one task);
+    # no-op on production-width scans
+    arr = _doc_tokens(spark, sf_dir).filter(F.size("toks") >= _SPAN_K)
     # binary digests (16 bytes vs 32-char hex — bijective, so the digest
     # census groups identically); persisted, because the plan otherwise
     # re-derives the one-md5-per-corpus-token pass once per consumer
@@ -837,9 +807,9 @@ def dup_span_census(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id",
         F.posexplode(
             F.transform(
-                F.sequence(F.lit(1), F.size("t") - _SPAN_K + 1),
+                F.sequence(F.lit(1), F.size("toks") - _SPAN_K + 1),
                 lambda i: F.unhex(
-                    F.md5(F.array_join(F.slice(F.col("t"), i, _SPAN_K), " "))
+                    F.md5(F.array_join(F.slice(F.col("toks"), i, _SPAN_K), " "))
                 ),
             )
         ).alias("pos", "dig"),

@@ -119,6 +119,89 @@ SHINGLES_SQL = (
 
 
 # ---------------------------------------------------------------------------
+# the MinHash-LSH chain: tokens -> shingle sets -> signatures -> band keys
+# -> candidates. Each step is defined once here; the helpers only build
+# plans, and each caller decides what to persist.
+# ---------------------------------------------------------------------------
+
+def _doc_tokens(spark: SparkSession, sf_dir: str, *cols: Column) -> DataFrame:
+    """``(doc_id, *cols, toks)`` over every document. The scan is widened
+    BEFORE tokenizing: a projection built below the repartition exchange
+    runs inside the (often 1-split) scan stage, serializing the per-token
+    work the fan-out exists to spread. ``cols`` are extra projections of
+    ``doc_id`` / ``text`` kept beside the tokens."""
+    return _fan_out(
+        spark, table(spark, sf_dir, "documents").select("doc_id", "text")
+    ).select("doc_id", *cols, _tokens(F.col("text")).alias("toks"))
+
+
+def _shingle_sets(docs: DataFrame) -> DataFrame:
+    """``(doc_id, arr)``: each document of at least 3 tokens with its
+    distinct word 3-grams as one row-local array (no explode)."""
+    return docs.filter(F.size("toks") >= 3).select(
+        "doc_id", F.array_distinct(_shingles(F.col("toks"))).alias("arr")
+    )
+
+
+def _signatures(sets: DataFrame, *keep: str | Column) -> DataFrame:
+    """``(doc_id, *keep, h0..h7)``: the MinHash signature of each
+    shingle set ``arr``, still row-local. ``keep`` are columns of, or
+    expressions over, ``sets`` carried beside the signature."""
+    sig = sets.select("doc_id", *keep, _minhash_struct("arr").alias("mh"))
+    return sig.select(*sig.columns[:-1], "mh.*")
+
+
+def _band_key(b: int, prefix: str = "") -> Column:
+    """Band ``b``'s key: the concatenation of its 2 signature hashes."""
+    return F.concat(F.col(f"{prefix}h{2 * b}"), F.col(f"{prefix}h{2 * b + 1}"))
+
+
+def _lsh_bands(sig: DataFrame) -> DataFrame:
+    """``(doc_id, band, bkey)``: ``N_BANDS`` rows per signature row."""
+    entries = F.array(
+        *[
+            F.struct(F.lit(b).alias("band"), _band_key(b).alias("bkey"))
+            for b in range(N_BANDS)
+        ]
+    )
+    return sig.select("doc_id", F.explode(entries).alias("e")).select(
+        "doc_id", F.col("e.band").alias("band"), F.col("e.bkey").alias("bkey")
+    )
+
+
+def _sig_sql(arr: str = "arr", h: str = "h") -> str:
+    """Oracle twin of :func:`_signatures`: the per-seed
+    ``list_min(list_transform(...))`` columns ``{h}0..{h}7`` of the
+    shingle array ``arr``."""
+    return ", ".join(
+        f"list_min(list_transform({arr}, s -> md5('{i}|' || s))) AS {h}{i}"
+        for i in range(N_HASHES)
+    )
+
+
+_SIG_SQL = _sig_sql()
+
+
+def _bkey_sql(b: int, h: str = "h") -> str:
+    """Oracle twin of :func:`_band_key`."""
+    return f"{h}{2 * b} || {h}{2 * b + 1}"
+
+
+def _bands_sql(src: str) -> str:
+    """Oracle twin of :func:`_lsh_bands` over the signature CTE ``src``."""
+    return " UNION ALL ".join(
+        f"SELECT doc_id, {b} AS band, {_bkey_sql(b)} AS bkey FROM {src}"
+        for b in range(N_BANDS)
+    )
+
+
+# oracle twin of the uncapped :func:`_band_candidates` over a ``bands`` CTE
+_CAND_SQL = """SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
+    FROM bands a JOIN bands b
+      ON a.band = b.band AND a.bkey = b.bkey AND a.doc_id < b.doc_id"""
+
+
+# ---------------------------------------------------------------------------
 # deduplication
 # ---------------------------------------------------------------------------
 
@@ -264,39 +347,14 @@ def _near_dup_pairs(
     frame they read. The lazy query has to leave that cache in place;
     an eager consumer releases it once it has materialized what it
     needs from the pairs."""
-    # widen BEFORE tokenizing: a projection built below the repartition
-    # exchange runs inside the (often 1-split) scan stage, serializing
-    # the per-token work the fan-out exists to spread
-    docs = _fan_out(
-        spark, table(spark, sf_dir, "documents").select("doc_id", "text")
-    ).select("doc_id", _tokens(F.col("text")).alias("toks"))
     # the shingle-set frame is reused three times (hashing + both sides of
     # the verify join); persist it so shingling runs once
     sets = scope.persist(
-        docs.filter(F.size("toks") >= 3)
-        .select(
-            "doc_id",
-            F.array_distinct(_shingles(F.col("toks"))).alias("arr"),
-        )
-        .withColumn("n", F.size("arr"))
+        _shingle_sets(_doc_tokens(spark, sf_dir)).withColumn("n", F.size("arr"))
     )
-    sig = sets.select("doc_id", _minhash_struct("arr").alias("mh")).select(
-        "doc_id", "mh.*"
+    candidates = _band_candidates(
+        _lsh_bands(_signatures(sets)), max_band_degree
     )
-    band_entries = F.array(
-        *[
-            F.struct(
-                F.lit(b).alias("band"),
-                F.concat(F.col(f"h{2 * b}"), F.col(f"h{2 * b + 1}")).alias("bkey"),
-            )
-            for b in range(N_BANDS)
-        ]
-    )
-    bands = sig.select("doc_id", F.explode(band_entries).alias("e")).select(
-        "doc_id", F.col("e.band").alias("band"), F.col("e.bkey").alias("bkey")
-    )
-
-    candidates = _band_candidates(bands, max_band_degree)
 
     pair_sets = sets.select("doc_id", "arr", "n")
     n_shared = F.size(F.array_intersect(F.col("na.arr"), F.col("nb.arr"))).cast("long")
@@ -325,17 +383,15 @@ WITH tok AS (
 ),
 sig AS (
     SELECT doc_id, arr, len(arr) AS n,
-           {', '.join(f"list_min(list_transform(arr, s -> md5('{i}|' || s))) AS h{i}" for i in range(N_HASHES))}
+           {_SIG_SQL}
     FROM (SELECT doc_id, list_distinct({SHINGLES_SQL}) AS arr
           FROM tok WHERE len(toks) >= 3)
 ),
 bands AS (
-    {' UNION ALL '.join(f"SELECT doc_id, {b} AS band, h{2 * b} || h{2 * b + 1} AS bkey FROM sig" for b in range(N_BANDS))}
+    {_bands_sql('sig')}
 ),
 cand AS (
-    SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-    FROM bands a JOIN bands b
-      ON a.band = b.band AND a.bkey = b.bkey AND a.doc_id < b.doc_id
+    {_CAND_SQL}
 )
 SELECT doc_a, doc_b, n_shared,
        ROUND(CAST(n_shared AS DOUBLE) / (na_n + nb_n - n_shared), 4) AS jaccard
@@ -392,12 +448,12 @@ WITH tok AS (
 ),
 sig AS (
     SELECT doc_id, arr, len(arr) AS n,
-           {', '.join(f"list_min(list_transform(arr, s -> md5('{i}|' || s))) AS h{i}" for i in range(N_HASHES))}
+           {_SIG_SQL}
     FROM (SELECT doc_id, list_distinct({SHINGLES_SQL}) AS arr
           FROM tok WHERE len(toks) >= 3)
 ),
 bands AS (
-    {' UNION ALL '.join(f"SELECT doc_id, {b} AS band, h{2 * b} || h{2 * b + 1} AS bkey FROM sig" for b in range(N_BANDS))}
+    {_bands_sql('sig')}
 ),
 deg AS (
     SELECT band, bkey, COUNT(*) AS deg FROM bands GROUP BY band, bkey
@@ -645,13 +701,10 @@ def decontaminate_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     expression per exploded row — O(shingles^2) per doc (benched 13x
     slower).
     """
-    docs = (
-        table(spark, sf_dir, "documents")
-        .select("doc_id", _tokens(F.col("text")).alias("toks"))
-        .filter(F.size("toks") >= 3)
-    )
-    shingled = scope.persist(docs.select(
-        "doc_id", F.array_distinct(_shingles(F.col("toks"))).alias("arr")
+    shingled = scope.persist(_shingle_sets(
+        table(spark, sf_dir, "documents").select(
+            "doc_id", _tokens(F.col("text")).alias("toks")
+        )
     ))
     bench = (
         shingled.filter(F.col("doc_id") < 10)
@@ -2135,12 +2188,7 @@ def dedup_recall_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     codegen; the only exchange is the final ~10-row bucket aggregate. No
     join, no shuffle of text. Recall audits at 100 TB cost one scan.
     """
-    # widen BEFORE tokenizing (see dedup_near_minhash): otherwise the
-    # token projection lands below the repartition exchange, inside the
-    # 1-split scan stage
-    docs = _fan_out(
-        spark, table(spark, sf_dir, "documents").select("doc_id", "text")
-    ).select("doc_id", _tokens(F.col("text")).alias("toks"))
+    docs = _doc_tokens(spark, sf_dir)
     m = F.lit(2) + F.pmod(F.col("doc_id"), F.lit(5))
     # |vtoks| in closed form: the variant keeps indices i in [1..n] with
     # i % m != 0, so exactly n - (n div m) survive. Filtering on the
@@ -2181,10 +2229,7 @@ def dedup_recall_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     caught = None
     for b in range(N_BANDS):
-        hit = (
-            F.concat(F.col(f"ma.h{2 * b}"), F.col(f"ma.h{2 * b + 1}"))
-            == F.concat(F.col(f"mb.h{2 * b}"), F.col(f"mb.h{2 * b + 1}"))
-        )
+        hit = _band_key(b, "ma.") == _band_key(b, "mb.")
         caught = hit if caught is None else caught | hit
     scored = sigged.select(
         "jaccard_bucket",
@@ -2208,17 +2253,8 @@ def dedup_recall_report(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _SHINGLES_V_SQL = SHINGLES_SQL.replace("toks", "vtoks")
 
-_SIG_A_SQL = ", ".join(
-    f"list_min(list_transform(arr_a, s -> md5('{i}|' || s))) AS ha{i}"
-    for i in range(N_HASHES)
-)
-_SIG_B_SQL = ", ".join(
-    f"list_min(list_transform(arr_b, s -> md5('{i}|' || s))) AS hb{i}"
-    for i in range(N_HASHES)
-)
 _CAUGHT_SQL = " OR ".join(
-    f"(ha{2 * b} || ha{2 * b + 1} = hb{2 * b} || hb{2 * b + 1})"
-    for b in range(N_BANDS)
+    f"({_bkey_sql(b, 'ha')} = {_bkey_sql(b, 'hb')})" for b in range(N_BANDS)
 )
 
 DEDUP_RECALL_SQL = f"""
@@ -2242,8 +2278,8 @@ sets AS (
 sig AS (
     SELECT doc_id, arr_a, arr_b,
            CAST(len(list_intersect(arr_a, arr_b)) AS DOUBLE) AS ninter,
-           {_SIG_A_SQL},
-           {_SIG_B_SQL}
+           {_sig_sql("arr_a", "ha")},
+           {_sig_sql("arr_b", "hb")}
     FROM sets
 ),
 scored AS (

@@ -14,7 +14,16 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from waterbear_spark import scope
-from waterbear_spark.queries.llm import SHINGLES_SQL, TOKENS_SQL, _fan_out, _tokens
+from waterbear_spark.queries.llm import (
+    SHINGLES_SQL,
+    TOKENS_SQL,
+    _CAND_SQL,
+    _band_candidates,
+    _doc_tokens,
+    _fan_out,
+    _shingle_sets,
+    _tokens,
+)
 from waterbear_spark.queries.tables import table
 
 # SHINGLES_SQL in llm.py is written against a CTE column named `toks`
@@ -56,20 +65,10 @@ def simhash_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     see the bench history.) The tiny sketch frame is persisted because
     bands + both verify sides reuse it.
     """
-    from waterbear_spark.queries.llm import _shingles
-
-    # widen BEFORE tokenizing: a projection built under the repartition
-    # exchange runs inside the 1-split scan stage (see dedup_near_minhash)
-    docs = _fan_out(
-        spark, table(spark, sf_dir, "documents").select("doc_id", "text")
-    ).select("doc_id", _tokens(F.col("text")).alias("raw"))
-    shingled = docs.filter(F.size("raw") >= 3).select(
-        "doc_id", F.array_distinct(_shingles(F.col("raw"))).alias("toks")
-    )
-    hashed = shingled.select(
+    hashed = _shingle_sets(_doc_tokens(spark, sf_dir)).select(
         "doc_id",
         F.expr(
-            "transform(toks, s -> CAST(CONV(SUBSTR(md5(s), 1, 15), 16, 10) AS BIGINT))"
+            "transform(arr, s -> CAST(CONV(SUBSTR(md5(s), 1, 15), 16, 10) AS BIGINT))"
         ).alias("hs"),
     )
     bits = hashed.select(
@@ -108,17 +107,7 @@ def simhash_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     bands = sketch.select("doc_id", F.explode(band_entries).alias("e")).select(
         "doc_id", F.col("e.band").alias("band"), F.col("e.bkey").alias("bkey")
     )
-    cand = (
-        bands.alias("a")
-        .join(
-            bands.alias("b"),
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.bkey") == F.col("b.bkey"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
-        .distinct()
-    )
+    cand = _band_candidates(bands)
     hamming = F.expr("CAST(bit_count(sa_hash ^ sb_hash) AS INT)")
     return (
         cand.join(
@@ -166,9 +155,7 @@ bits AS (
 sh AS (SELECT doc_id, {sketch} AS simhash FROM bits),
 bands AS ({bands}),
 cand AS (
-    SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-    FROM bands a JOIN bands b
-      ON a.band = b.band AND a.bkey = b.bkey AND a.doc_id < b.doc_id
+    {_CAND_SQL}
 )
 SELECT doc_a, doc_b,
        CAST(bit_count(xor(sa.simhash, sb.simhash)) AS INTEGER) AS hamming

@@ -26,13 +26,17 @@ from pyspark.sql import functions as F
 
 from waterbear_spark import scope
 from waterbear_spark.queries.llm import (
-    N_BANDS,
-    N_HASHES,
     SHINGLES_SQL,
     TOKENS_SQL,
-    _fan_out,
-    _minhash_struct,
-    _shingles,
+    _CAND_SQL,
+    _SIG_SQL,
+    _band_candidates,
+    _bands_sql,
+    _doc_tokens,
+    _fold_dot,
+    _lsh_bands,
+    _shingle_sets,
+    _signatures,
     _tokens,
 )
 from waterbear_spark.queries.tables import table
@@ -67,67 +71,23 @@ def dedup_cross_modal(spark: SparkSession, sf_dir: str) -> DataFrame:
     fall back to Jaccard).
     """
     # the shingle+MinHash fold is CPU-per-byte-dense and otherwise runs
-    # at the scan's file-split width; widen to cluster width first
-    # (AQE_PROBE_r11 A/B: 1.14x at sf1; no-op on wide production scans).
-    # Tokenize AFTER the widen: a projection built under the repartition
-    # exchange runs inside the 1-split scan stage (see dedup_near_minhash)
-    docs = _fan_out(
-        spark, table(spark, sf_dir, "documents").select("doc_id", "text")
-    ).select("doc_id", _tokens(F.col("text")).alias("toks"))
+    # at the scan's file-split width; _doc_tokens widens to cluster width
+    # first (AQE_PROBE_r11 A/B: 1.14x at sf1; no-op on wide production
+    # scans)
     sets = scope.persist(
-        docs.filter(F.size("toks") >= 3)
-        .select(
-            "doc_id", F.array_distinct(_shingles(F.col("toks"))).alias("arr")
-        )
-        .withColumn("n", F.size("arr"))
+        _shingle_sets(_doc_tokens(spark, sf_dir)).withColumn("n", F.size("arr"))
     )
-
-    sig = sets.select("doc_id", _minhash_struct("arr").alias("mh")).select(
-        "doc_id", "mh.*"
-    )
-    band_entries = F.array(
-        *[
-            F.struct(
-                F.lit(b).alias("band"),
-                F.concat(F.col(f"h{2 * b}"), F.col(f"h{2 * b + 1}")).alias(
-                    "bkey"
-                ),
-            )
-            for b in range(N_BANDS)
-        ]
-    )
-    bands = sig.select("doc_id", F.explode(band_entries).alias("e")).select(
-        "doc_id", F.col("e.band").alias("band"), F.col("e.bkey").alias("bkey")
-    )
-    candidates = (
-        bands.alias("a")
-        .join(
-            bands.alias("b"),
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.bkey") == F.col("b.bkey"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(
-            F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b")
-        )
-        .distinct()
-    )
+    candidates = _band_candidates(_lsh_bands(_signatures(sets)))
 
     n_shared = F.size(
         F.array_intersect(F.col("na.arr"), F.col("nb.arr"))
     ).cast("long")
     jac = n_shared.cast("double") / (F.col("na.n") + F.col("nb.n") - n_shared)
 
-    emb = table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-
-    def dot(a, b):
-        return F.aggregate(
-            F.zip_with(
-                a, b, lambda x, y: x.cast("double") * y.cast("double")
-            ),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
+    emb = table(spark, sf_dir, "embeddings").select(
+        "vec_id",
+        F.transform("embedding", lambda x: x.cast("double")).alias("embedding"),
+    )
 
     scored = (
         candidates.join(sets.alias("na"), F.col("doc_a") == F.col("na.doc_id"))
@@ -141,10 +101,10 @@ def dedup_cross_modal(spark: SparkSession, sf_dir: str) -> DataFrame:
             "doc_b",
             F.round(jac, 4).alias("jaccard"),
             F.round(
-                dot(F.col("ea.embedding"), F.col("eb.embedding"))
+                _fold_dot("ea.embedding", "eb.embedding")
                 / (
-                    F.sqrt(dot(F.col("ea.embedding"), F.col("ea.embedding")))
-                    * F.sqrt(dot(F.col("eb.embedding"), F.col("eb.embedding")))
+                    F.sqrt(_fold_dot("ea.embedding", "ea.embedding"))
+                    * F.sqrt(_fold_dot("eb.embedding", "eb.embedding"))
                 ),
                 6,
             ).alias("cosine"),
@@ -185,16 +145,14 @@ sets AS MATERIALIZED (
 ),
 sig AS MATERIALIZED (
     SELECT doc_id, arr, n,
-           {', '.join(f"list_min(list_transform(arr, s -> md5('{i}|' || s))) AS h{i}" for i in range(N_HASHES))}
+           {_SIG_SQL}
     FROM sets
 ),
 bands AS MATERIALIZED (
-    {' UNION ALL '.join(f"SELECT doc_id, {b} AS band, h{2 * b} || h{2 * b + 1} AS bkey FROM sig" for b in range(N_BANDS))}
+    {_bands_sql('sig')}
 ),
 cand AS MATERIALIZED (
-    SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-    FROM bands a JOIN bands b
-      ON a.band = b.band AND a.bkey = b.bkey AND a.doc_id < b.doc_id
+    {_CAND_SQL}
 ),
 scored AS (
     SELECT doc_a, doc_b,

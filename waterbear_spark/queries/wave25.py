@@ -39,7 +39,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from waterbear_spark import scope
-from waterbear_spark.queries.llm import TOKENS_SQL, _fan_out, _tokens
+from waterbear_spark.queries.llm import TOKENS_SQL, _doc_tokens, _fan_out, _tokens
 from waterbear_spark.queries.tables import table
 
 _MANIFEST_K = 10  # tokens per window — same granularity as dup_span_census
@@ -141,9 +141,7 @@ def dup_span_rewrite(spark: SparkSession, sf_dir: str) -> DataFrame:
     the splice is one row-local indexed ``filter`` over the token array —
     no extra corpus shuffle beyond the manifest's own.
     """
-    docs = _fan_out(
-        spark, table(spark, sf_dir, "documents").select("doc_id", "text")
-    ).select("doc_id", _tokens(F.col("text")).alias("t"))
+    docs = _doc_tokens(spark, sf_dir)
     manifest = dup_span_removal_manifest(spark, sf_dir)
     islands = manifest.groupBy("doc_id").agg(
         F.collect_list(F.struct("cut_start", "cut_end")).alias("isl")
@@ -154,10 +152,10 @@ def dup_span_rewrite(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return (
         docs.join(islands, "doc_id")
-        .withColumn("kept", F.filter("t", lambda x, i: ~covered(i)))
+        .withColumn("kept", F.filter("toks", lambda x, i: ~covered(i)))
         .select(
             "doc_id",
-            F.size("t").cast("long").alias("n_before"),
+            F.size("toks").cast("long").alias("n_before"),
             F.size("kept").cast("long").alias("n_after"),
             F.array_join("kept", " ").alias("text_after"),
         )

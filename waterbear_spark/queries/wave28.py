@@ -34,16 +34,18 @@ from pyspark.sql import functions as F
 
 from waterbear_spark import scope
 from waterbear_spark.queries.llm import (
-    N_BANDS,
     N_HASHES,
     SHINGLES_SQL,
     TOKENS_SQL,
-    _fan_out,
-    _minhash_struct,
-    _shingles,
-    _tokens,
+    _CAND_SQL,
+    _SIG_SQL,
+    _band_candidates,
+    _bands_sql,
+    _doc_tokens,
+    _lsh_bands,
+    _shingle_sets,
+    _signatures,
 )
-from waterbear_spark.queries.tables import table
 
 _SWEEP_TAUS = (0.3, 0.5, 0.7, 0.8, 0.9)
 
@@ -54,47 +56,9 @@ def _candidate_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     Same scan/band shapes as [[dedup_near_minhash]]; the signature
     frame additionally carries the 8 hash components for the
     agreement count."""
-    # widen BEFORE tokenizing: a projection built under the repartition
-    # exchange runs inside the 1-split scan stage (see dedup_near_minhash)
-    docs = _fan_out(
-        spark, table(spark, sf_dir, "documents").select("doc_id", "text")
-    ).select("doc_id", _tokens(F.col("text")).alias("toks"))
-    sets = docs.filter(F.size("toks") >= 3).select(
-        "doc_id", F.array_distinct(_shingles(F.col("toks"))).alias("arr")
-    )
-
-    sig = scope.persist(
-        sets.select(
-            "doc_id",
-            "arr",
-            F.size("arr").alias("n"),
-            _minhash_struct("arr").alias("mh"),
-        )
-        .select("doc_id", "arr", "n", "mh.*")
-    )
-    band_entries = F.array(
-        *[
-            F.struct(
-                F.lit(b).alias("band"),
-                F.concat(F.col(f"h{2 * b}"), F.col(f"h{2 * b + 1}")).alias("bkey"),
-            )
-            for b in range(N_BANDS)
-        ]
-    )
-    bands = sig.select("doc_id", F.explode(band_entries).alias("e")).select(
-        "doc_id", F.col("e.band").alias("band"), F.col("e.bkey").alias("bkey")
-    )
-    candidates = (
-        bands.alias("a")
-        .join(
-            bands.alias("b"),
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.bkey") == F.col("b.bkey"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
-        .distinct()
-    )
+    sets = _shingle_sets(_doc_tokens(spark, sf_dir))
+    sig = scope.persist(_signatures(sets, "arr", F.size("arr").alias("n")))
+    candidates = _band_candidates(_lsh_bands(sig))
     matches = sum(
         (F.col(f"na.h{i}") == F.col(f"nb.h{i}")).cast("int")
         for i in range(N_HASHES)
@@ -180,17 +144,15 @@ tok AS (
 ),
 sig AS (
     SELECT doc_id, arr, len(arr) AS n,
-           {', '.join(f"list_min(list_transform(arr, s -> md5('{i}|' || s))) AS h{i}" for i in range(N_HASHES))}
+           {_SIG_SQL}
     FROM (SELECT doc_id, list_distinct({SHINGLES_SQL}) AS arr
           FROM tok WHERE len(toks) >= 3)
 ),
 bands AS (
-    {' UNION ALL '.join(f"SELECT doc_id, {b} AS band, h{2 * b} || h{2 * b + 1} AS bkey FROM sig" for b in range(N_BANDS))}
+    {_bands_sql('sig')}
 ),
 cand AS (
-    SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-    FROM bands a JOIN bands b
-      ON a.band = b.band AND a.bkey = b.bkey AND a.doc_id < b.doc_id
+    {_CAND_SQL}
 ),
 pairs AS (
     SELECT c.doc_a, c.doc_b,

@@ -57,17 +57,18 @@ from pyspark.sql import functions as F
 from waterbear_spark import scope
 from waterbear_spark.operators.ntile import bucketed_ntile
 from waterbear_spark.queries.llm import (
-    N_BANDS,
-    N_HASHES,
     SHINGLES_SQL,
     TOKENS_SQL,
+    _SIG_SQL,
+    _bands_sql,
+    _doc_tokens,
     _embedding_dim,
     _fan_out,
     _ivf_ctes,
     _ivf_index,
-    _minhash_struct,
-    _shingles,
-    _tokens,
+    _lsh_bands,
+    _shingle_sets,
+    _signatures,
 )
 from waterbear_spark.queries.tables import DEC, table
 from waterbear_spark.queries.wave5 import _RAKE_STOP
@@ -138,30 +139,8 @@ def near_dup_degree_census(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Candidate-degree histogram of the LSH band graph — see module
     docstring. Output: (degree, n_docs) over every shingled document,
     degree 0 included, ordered by degree."""
-    # widen BEFORE tokenizing: a projection built under the repartition
-    # exchange runs inside the 1-split scan stage (see dedup_near_minhash)
-    docs = _fan_out(
-        spark, table(spark, sf_dir, "documents").select("doc_id", "text")
-    ).select("doc_id", _tokens(F.col("text")).alias("toks"))
-    sets = docs.filter(F.size("toks") >= 3).select(
-        "doc_id", F.array_distinct(_shingles(F.col("toks"))).alias("arr")
-    )
-
-    sig = sets.select("doc_id", _minhash_struct("arr").alias("mh")).select(
-        "doc_id", "mh.*"
-    )
-    band_entries = F.array(
-        *[
-            F.struct(
-                F.lit(b).alias("band"),
-                F.concat(F.col(f"h{2 * b}"), F.col(f"h{2 * b + 1}")).alias("bkey"),
-            )
-            for b in range(N_BANDS)
-        ]
-    )
-    bands = sig.select("doc_id", F.explode(band_entries).alias("e")).select(
-        "doc_id", F.col("e.band").alias("band"), F.col("e.bkey").alias("bkey")
-    )
+    sets = _shingle_sets(_doc_tokens(spark, sf_dir))
+    bands = _lsh_bands(_signatures(sets))
     partners = (
         bands.alias("a")
         .join(
@@ -191,12 +170,12 @@ WITH tok AS (
 ),
 sig AS (
     SELECT doc_id,
-           {', '.join(f"list_min(list_transform(arr, s -> md5('{i}|' || s))) AS h{i}" for i in range(N_HASHES))}
+           {_SIG_SQL}
     FROM (SELECT doc_id, list_distinct({SHINGLES_SQL}) AS arr
           FROM tok WHERE len(toks) >= 3)
 ),
 bands AS (
-    {' UNION ALL '.join(f"SELECT doc_id, {b} AS band, h{2 * b} || h{2 * b + 1} AS bkey FROM sig" for b in range(N_BANDS))}
+    {_bands_sql('sig')}
 ),
 deg AS (
     SELECT doc_id, COUNT(*) AS degree FROM (
@@ -227,8 +206,7 @@ def curriculum_schedule(spark: SparkSession, sf_dir: str) -> DataFrame:
     # not array_contains over the 33-literal array (O(|stop|) per
     # token); same count, bit-identical quality.
     docs = scope.persist(
-        _fan_out(spark, table(spark, sf_dir, "documents").select("doc_id", "text"))
-        .select("doc_id", _tokens(F.col("text")).alias("toks"))
+        _doc_tokens(spark, sf_dir)
         .filter(F.size("toks") > 0)
         .select(
             "doc_id",

@@ -437,25 +437,16 @@ def containment_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     pair at >= 50% shares half of A's shingle set, which at typical df
     skew includes many rare shingles.
     """
-    from waterbear_spark.queries.llm import _fan_out, _shingles, _tokens
+    from waterbear_spark.queries.llm import _doc_tokens, _shingle_sets
 
-    # shingle hashing dominates and runs at scan width — widen first
-    # (AQE_PROBE_r11 family: 1.9x at the bench scale; no-op on
-    # production-width scans)
-    docs = _fan_out(
-        spark, table(spark, sf_dir, "documents").select("doc_id", "text")
-    ).select("doc_id", _tokens(F.col("text")).alias("toks"))
-    # keep the SET form: each doc's distinct shingles stay one array row,
-    # so the exact-intersection phase is a row-local array_intersect
-    # instead of two corpus-sized (shingle, doc) shuffles (r11; guide
-    # §2.3 "shuffle keys, not payloads", §2.4)
-    docs_arr = scope.persist(
-        docs.filter(F.size("toks") >= 3)
-        .select(
-            "doc_id", F.array_distinct(_shingles(F.col("toks"))).alias("sharr")
-        )
-    )
-    sh = docs_arr.select("doc_id", F.explode("sharr").alias("sh"))
+    # shingle hashing dominates and runs at scan width — _doc_tokens
+    # widens first (AQE_PROBE_r11 family: 1.9x at the bench scale; no-op
+    # on production-width scans). Keep the SET form: each doc's distinct
+    # shingles stay one array row, so the exact-intersection phase is a
+    # row-local array_intersect instead of two corpus-sized (shingle,
+    # doc) shuffles (r11; guide §2.3 "shuffle keys, not payloads", §2.4)
+    docs_arr = scope.persist(_shingle_sets(_doc_tokens(spark, sf_dir)))
+    sh = docs_arr.select("doc_id", F.explode("arr").alias("sh"))
     rare = (
         sh.groupBy("sh")
         .agg(F.count(F.lit(1)).alias("df"))
@@ -490,13 +481,13 @@ def containment_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         cand.join(
             docs_arr.select(
-                F.col("doc_id").alias("da"), F.col("sharr").alias("sa")
+                F.col("doc_id").alias("da"), F.col("arr").alias("sa")
             ),
             "da",
         )
         .join(
             docs_arr.select(
-                F.col("doc_id").alias("db"), F.col("sharr").alias("sb")
+                F.col("doc_id").alias("db"), F.col("arr").alias("sb")
             ),
             "db",
         )

@@ -16,7 +16,6 @@ from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from pyspark.sql.types import (
     DoubleType,
     LongType,
-    StringType,
     StructField,
     StructType,
 )
@@ -50,66 +49,6 @@ def _accumulate(
     )
 
 
-try:  # transformWithStateInPandas requires pyspark >= 4.0
-    from pyspark.sql.streaming.stateful_processor import StatefulProcessor
-
-    HAS_TWS = True
-except ImportError:  # pragma: no cover - env pins pyspark 4.x
-    StatefulProcessor = object
-    HAS_TWS = False
-
-
-class _RunningTotalsProcessor(StatefulProcessor):
-    """StatefulProcessor: per-key running (count, sum) in a ValueState."""
-
-    def init(self, handle) -> None:
-        self._totals = handle.getValueState("totals", _STATE_SCHEMA)
-
-    def handleInputRows(self, key, rows, timerValues):
-        n, total = self._totals.get() if self._totals.exists() else (0, 0.0)
-        for pdf in rows:
-            n += len(pdf)
-            total += float(pdf["value"].sum())
-        self._totals.update((n, total))
-        yield pd.DataFrame(
-            {
-                "user_id": [key[0]],
-                "n_events": [n],
-                "total_value": [round(total, 2)],
-            }
-        )
-
-    def close(self) -> None:
-        pass
-
-
-def running_user_totals_tws(events: DataFrame) -> DataFrame:
-    """Running totals via ``transformWithStateInPandas`` — the Spark 4
-    successor to applyInPandasWithState: typed state handles (value/list/
-    map state), timers, and TTL under one StatefulProcessor lifecycle.
-
-    Same semantics as :func:`running_user_totals`; kept as a parallel
-    implementation because the new API requires the RocksDB state store
-    (set ``spark.sql.streaming.stateStore.providerClass`` to the RocksDB
-    provider) whose changelog + disk spill is also the 100 TB answer to
-    state larger than executor memory.
-
-    Runtime requirement beyond this repo's pinned deps: the ``protobuf``
-    python package (TWS state-server protocol); the test suite skips when
-    it is absent.
-    """
-    return (
-        events.select("user_id", "value")
-        .groupBy("user_id")
-        .transformWithStateInPandas(
-            statefulProcessor=_RunningTotalsProcessor(),
-            outputStructType=RUNNING_SCHEMA,
-            outputMode="Update",
-            timeMode="None",
-        )
-    )
-
-
 def running_user_totals(events: DataFrame) -> DataFrame:
     """Streaming running totals per user via applyInPandasWithState.
 
@@ -117,7 +56,9 @@ def running_user_totals(events: DataFrame) -> DataFrame:
     micro-batch — the accumulate-and-emit pattern (e.g. per-user rate
     counters, feature freshness) that windowed aggregation can't express
     because there is no window: state lives for the key's lifetime.
-    Use ``outputMode("update")``.
+    Use ``outputMode("update")``. For state larger than executor memory,
+    set ``spark.sql.streaming.stateStore.providerClass`` to the RocksDB
+    provider: its changelog and disk spill apply to this operator too.
     """
     return (
         events.select("user_id", "value")
